@@ -16,7 +16,11 @@ preserve per-key arrival order, and its generators emit in order).
 
 Scale: state is one small tuple per key in the state store (RocksDB
 provider for large key spaces); Arrow transfer is batched per
-micro-batch, not per row.
+micro-batch, not per row. Under ``ProcessingTimeTimeout`` each state
+partition's task makes two Python round trips per micro-batch: one for
+the keys with new data and one for the timed-out keys, even when none
+timed out. Any fixed per-invocation worker cost is therefore paid
+triggers x partitions x 2 times (``worker_daemon`` removes the largest).
 
 State eviction: with an open key domain (user_id at 100 TB), per-key
 state must not live forever. Every operator here registers a

@@ -1,5 +1,7 @@
 from __future__ import annotations
 
+import os
+
 import pytest
 
 import hypo
@@ -20,6 +22,11 @@ def pytest_configure(config):
 
 @pytest.fixture(scope="session")
 def spark():
+    # a driver heap sized to the host: under get_spark's 48g default, G1
+    # grew the test JVM to 14-15.5 GB on a 16 GB machine and the kernel's
+    # OOM killer ended the run; the test inputs need far less
+    ram_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**20
+    os.environ.setdefault("SPARK_DRIVER_MEM", f"{ram_mb // 4}m")
     s = get_spark("tests", cpus=8)
     yield s
 

@@ -790,10 +790,11 @@ def test_hll_windowed_append_watermark(spark, events_csv_timeordered):
     assert got == want
 
 
-def test_cms_sketch_streaming_parity(spark, batch_events, stream_events):
+def test_cms_inline_sketch_streaming_parity(spark, batch_events, stream_events):
     """Count-min sketch state is additive counts -> runs unchanged as an
     update-mode streaming agg; final per-(row, bucket) counter equals
-    the batch sketch (here over event_type as the item stream)."""
+    the batch sketch (here over event_type as the item stream, with the
+    counter build written inline rather than through the operator)."""
     from demo_apache_flink_streaming_mode_spark.functions.scalars import hex_to_long
 
     def sketch(df):
@@ -804,9 +805,9 @@ def test_cms_sketch_streaming_parity(spark, batch_events, stream_events):
                                         1, 4) % 256)
                 .groupBy("row", "bucket").agg(F.count("*").alias("cnt")))
 
-    _drain(sketch(stream_events), "t_cms", mode="update")
+    _drain(sketch(stream_events), "t_cms_inline", mode="update")
     final = {}
-    for r in spark.table("t_cms").collect():
+    for r in spark.table("t_cms_inline").collect():
         final[(r["row"], r["bucket"])] = r["cnt"]
     want = {(r["row"], r["bucket"]): r["cnt"]
             for r in sketch(batch_events).collect()}
