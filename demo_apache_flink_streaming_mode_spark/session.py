@@ -19,6 +19,20 @@ the Python workers (``applyInPandasWithState`` state handlers,
 
 A session handed in by a caller (``ensure_runtime_confs``) keeps the
 stock daemon: static confs cannot be set on a running session.
+
+Streaming checkpoints commit through Spark's
+``FileSystemBasedCheckpointFileManager``, a runtime conf in
+``RUNTIME_CONFS``, so both kinds of session get it. The PySpark build
+ships no ``libhadoop``, so Hadoop's local file system runs a shell
+command for each permission set (``chmod``) and each link lookup
+(``readlink``). Spark's default manager renames through ``FileContext``,
+which looks up the links of both paths of a file and of its ``.crc``
+sidecar before every rename: 16 ``readlink`` and 4 ``chmod`` processes
+per state-store commit, 2,072 ``readlink`` and 716 ``chmod`` per pass of
+the ``stream_replay`` benchmark, each a process start of a few
+milliseconds. ``FileSystem.rename`` is one ``rename(2)`` on a local disk
+and forks nothing; what is left is the ``chmod`` that the local file
+system runs for every file it creates.
 """
 
 from __future__ import annotations
@@ -50,6 +64,17 @@ RUNTIME_CONFS: dict[str, str] = {
     # by default upstream only because the one-file check costs
     # planning time on huge tables
     "spark.sql.legacy.bucketedTableScan.outputOrdering": "true",
+    # streaming checkpoints (offset, commit and sink metadata logs,
+    # state-store deltas) rename with FileSystem.rename, not FileContext,
+    # which forks ``readlink`` processes (see the module docstring). On a
+    # local disk the semantics match: a no-overwrite rename is an exists
+    # check then rename under both managers, and an overwrite replaces
+    # the target under both. Hadoop's .crc sidecars and Spark's checkpoint
+    # checksums (ChecksumCheckpointFileManager wraps this manager) are
+    # still written.
+    "spark.sql.streaming.checkpointFileManagerClass":
+        "org.apache.spark.sql.execution.streaming.checkpointing."
+        "FileSystemBasedCheckpointFileManager",
 }
 
 

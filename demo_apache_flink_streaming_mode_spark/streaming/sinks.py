@@ -3,7 +3,12 @@
 K1 — file sink: row-format bucketed output with checkpointing
 (reference: StreamingFileSink + SimpleStringEncoder,
 ``chapter2/BasicStreamingOperations.java:105-115``). Spark's file sink
-is exactly-once via the checkpoint + file-manifest commit protocol.
+is exactly-once via the checkpoint + file-manifest commit protocol:
+each epoch's offset-log entry, state-store deltas, ``_spark_metadata``
+manifest and commit-log entry are written to a temp file and renamed
+into place by the checkpoint file manager, which ``session``
+sets to Spark's ``FileSystemBasedCheckpointFileManager`` (one
+``FileSystem.rename`` per file; see ``session.RUNTIME_CONFS``).
 
 K2 — Kafka sink. The reference configures Semantic.EXACTLY_ONCE on its
 producer (``chapter4/EventTimeOperations.java:183-220``). Spark's Kafka
@@ -19,6 +24,7 @@ output at the sink where it belongs).
 
 from __future__ import annotations
 
+from pyspark.errors import StreamingQueryException
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 
@@ -109,6 +115,10 @@ def drain_available(q: StreamingQuery, timeout_s: int = 120,
     instead: once ``settle_batches`` consecutive batches read zero
     input rows, every handler output and any due timeout eviction has
     been processed, and the query is stopped explicitly.
+
+    Between polls it waits on the query's own termination, so a query
+    that ends by itself returns at once. It never raises for a failed
+    query; callers read ``q.exception()``.
     """
     import time
 
@@ -122,7 +132,10 @@ def drain_available(q: StreamingQuery, timeout_s: int = 120,
             zero_batches = zero_batches + 1 if p["numInputRows"] == 0 else 0
             if zero_batches >= settle_batches:
                 break
-        time.sleep(0.25)
+        try:
+            q.awaitTermination(0.25)
+        except StreamingQueryException:
+            break
     if q.isActive:
         q.stop()
         q.awaitTermination(timeout_s)

@@ -280,6 +280,18 @@ def test_file_sink_roundtrip(spark, batch_events, stream_events, tmp_path):
     assert back.count() == expected
 
 
+def test_drain_available_does_not_raise_for_a_failed_query(spark,
+                                                           stream_events):
+    """A query that fails mid-drain ends the drain; the failure is read
+    from ``q.exception()``, not raised by ``drain_available``."""
+    boom = stream_events.select(F.raise_error(F.lit("boom")).alias("x"))
+    q = (boom.writeStream.format("memory").queryName("t_drain_failed")
+         .trigger(availableNow=True).start())
+    sinks.drain_available(q, timeout_s=60)
+    assert not q.isActive
+    assert "boom" in str(q.exception())
+
+
 def test_streaming_corpus_quality_dedup_parity(spark, sf_dir, tmp_path):
     """The LLM-pipeline composition on a document STREAM: exact dedup
     (first-arrival keeper) + quality scoring, all stateless/bounded
