@@ -1265,10 +1265,12 @@ def binary_sign_words(vec_col: str, dim: int) -> list[Column]:
     plan-building per ``topk_binary_rerank`` (two calls) at dim=64
     (r12). SQL ``+`` parses left-associative, so the packing sum tree
     — and therefore every word value — is identical either way."""
+    # a backtick inside a quoted identifier is written twice in Spark SQL
+    col = "`" + vec_col.replace("`", "``") + "`"
     words = []
     for lo in range(0, dim, 32):
         terms = " + ".join(
-            f"(CASE WHEN CAST(element_at(`{vec_col}`, {i + 1}) AS DOUBLE)"
+            f"(CASE WHEN CAST(element_at({col}, {i + 1}) AS DOUBLE)"
             f" >= 0 THEN CAST({1 << (i - lo)} AS BIGINT)"
             f" ELSE CAST(0 AS BIGINT) END)"
             for i in range(lo, min(lo + 32, dim)))

@@ -44,10 +44,11 @@ from pyspark.sql import SparkSession
 _PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 # Confs that are safe to set on an already-running session (runtime confs).
-# ``nanosAsLong`` matters because the driver-generated events.parquet stores
-# ts as TIMESTAMP(NANOS), which Spark's vectorized parquet reader otherwise
-# rejects; with the flag the column surfaces as LongType(nanos) and
-# sources.batch converts it to a proper TimestampType at ingest.
+# ``nanosAsLong`` is for nanosecond inputs: the driver's testdata stores
+# every timestamp as INT64 TIMESTAMP(MICROS, isAdjustedToUTC=false), but a
+# TIMESTAMP(NANOS) column, which Spark's parquet reader otherwise rejects,
+# surfaces with the flag as LongType(nanos), and sources.batch converts it
+# to the declared TimestampType at ingest.
 RUNTIME_CONFS: dict[str, str] = {
     "spark.sql.session.timeZone": "UTC",
     "spark.sql.legacy.parquet.nanosAsLong": "true",

@@ -9,6 +9,7 @@ lives in ``sources.files``.
 from __future__ import annotations
 
 import os
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
@@ -44,27 +45,76 @@ _SPLIT_KEYS: dict[str, str] = {
     "documents": "doc_id",
     "embeddings": "vec_id",
 }
-_meta_cache: dict[str, tuple[int, int]] = {}  # path -> (num_rows, num_row_groups)
 
 
-def _parquet_meta(path: str) -> tuple[int, int]:
-    if path not in _meta_cache:
-        try:
-            import pyarrow.parquet as pq
-            f = pq.ParquetFile(path)
-            _meta_cache[path] = (f.metadata.num_rows, f.num_row_groups)
-        except Exception:
-            _meta_cache[path] = (0, 1 << 30)
-    return _meta_cache[path]
+class _Footer(NamedTuple):
+    """What ``load_table`` needs from a parquet footer."""
+    num_rows: int
+    num_row_groups: int
+    columns: tuple[str, ...]  # top-level column names, in file order
+    nanos: frozenset[str]  # INT64 TIMESTAMP(NANOS) columns
+
+
+# path -> ((st_mtime_ns, st_size, st_ino), footer): a file rewritten at
+# the same path gets its footer read again
+_meta_cache: dict[str, tuple[tuple[int, int, int], _Footer]] = {}
+
+
+def _parquet_meta(path: str) -> _Footer:
+    st = os.stat(path)
+    stamp = (st.st_mtime_ns, st.st_size, st.st_ino)
+    hit = _meta_cache.get(path)
+    if hit is None or hit[0] != stamp:
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+        # INT96 timestamps surface as micros, so only a true INT64
+        # TIMESTAMP(NANOS) column (the one nanosAsLong turns into a long)
+        # reads as ns here
+        f = pq.ParquetFile(path, coerce_int96_timestamp_unit="us")
+        arrow = f.schema_arrow
+        hit = stamp, _Footer(
+            f.metadata.num_rows, f.num_row_groups, tuple(arrow.names),
+            frozenset(fld.name for fld in arrow
+                      if pa.types.is_timestamp(fld.type) and fld.type.unit == "ns"))
+        _meta_cache[path] = hit
+    return hit[1]
+
+
+def _file_schema(name: str, path: str,
+                 footer: _Footer) -> tuple[T.StructType, list[str]]:
+    """The declared schema of table ``name``, cut to the columns of this
+    file's footer (in file order), so a column the file lacks still fails
+    at analysis instead of reading as nulls; plus the declared timestamp
+    columns the file stores as TIMESTAMP(NANOS). Those are read as
+    ``LongType`` (``nanosAsLong``) for ``load_table`` to convert."""
+    declared = {f.name: f for f in TESTDATA_TABLES[name].fields}
+    undeclared = [c for c in footer.columns if c not in declared]
+    if undeclared:
+        raise ValueError(
+            f"{path}: column(s) {undeclared} are not declared in "
+            f"schemas.TESTDATA_TABLES[{name!r}]")
+    as_nanos = [c for c in footer.columns if c in footer.nanos
+                and isinstance(declared[c].dataType, T.TimestampType)]
+    schema = T.StructType([
+        T.StructField(c, T.LongType(), declared[c].nullable)
+        if c in as_nanos else declared[c] for c in footer.columns])
+    return schema, as_nanos
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Load one testdata table, normalizing types to the declared schema.
+    """Load one testdata table with its declared schema
+    (``schemas.TESTDATA_TABLES``), never an inferred one.
 
-    events.ts is physically TIMESTAMP(NANOS) parquet; with
-    ``spark.sql.legacy.parquet.nanosAsLong`` it reads as LongType nanos
-    and is converted here to TimestampType (micros — exact, the data has
-    micro precision).
+    The footer facts the read needs (row and row-group counts, column
+    names, timestamp units) come from one pyarrow footer read, cached per
+    file, so a load starts no Spark job: Spark's own schema inference is a
+    one-task job plus a footer read per call.
+
+    The driver's testdata stores every timestamp as INT64
+    TIMESTAMP(MICROS, isAdjustedToUTC=false), which reads directly as the
+    declared ``TimestampType``. A TIMESTAMP(NANOS) column needs
+    ``spark.sql.legacy.parquet.nanosAsLong``: it reads as LongType nanos
+    and is converted here to TimestampType micros.
 
     Filters/pruning still push down to the scan: Catalyst moves
     predicates below the repartition, so `.explain` shows PushedFilters
@@ -72,20 +122,21 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """
     ensure_runtime_confs(spark)
     path = os.path.join(sf_dir, f"{name}.parquet")
-    df = spark.read.parquet(path)
-    n_rows, n_groups = _parquet_meta(path)
+    footer = _parquet_meta(path)
+    schema, as_nanos = _file_schema(name, path, footer)
+    df = spark.read.schema(schema).parquet(path)
     par = spark.sparkContext.defaultParallelism
-    if n_rows >= _SPLIT_MIN_ROWS and n_groups < par:
-        # guard: a listed key missing from this file's schema falls back
-        # to round-robin instead of an AnalysisException at plan time
+    if footer.num_rows >= _SPLIT_MIN_ROWS and footer.num_row_groups < par:
+        # guard: a listed key missing from this file falls back to
+        # round-robin instead of an AnalysisException at plan time
         key = _SPLIT_KEYS.get(name)
-        if key is not None and key not in df.columns:
+        if key is not None and key not in schema.fieldNames():
             key = None
         df = df.repartition(par, F.col(key)) if key else df.repartition(par)
-    if name == "events" and isinstance(df.schema["ts"].dataType, T.LongType):
+    for c in as_nanos:
         # integer `div`, NOT `/`: float division of ~1.7e18 ns exceeds
         # double precision and shifts timestamps by ±1 ms
-        df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
+        df = df.withColumn(c, F.timestamp_micros(F.expr(f"`{c}` div 1000")))
     return df
 
 

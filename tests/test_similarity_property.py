@@ -170,3 +170,19 @@ def test_topk_binary_rerank_matches_reference(spark, rows, k, mult):
                spark.createDataFrame(rows, schema), k,
                dim=DIM, mult=mult).collect()}
     assert got == want
+
+
+def test_binary_sign_words_quotes_backticks_in_column_name(spark):
+    """A vector column whose name holds a backtick packs the same words
+    as one with a plain name (the name is pasted into an ``F.expr``)."""
+    rows = [(1, [0.5, -1.0, 0.0, -0.25] * 9), (2, [-2.0, 3.0, -0.5, 1.0] * 9)]
+    df = spark.createDataFrame(rows, "vec_id long, plain array<double>")
+    df = df.withColumn("we`ird ``name", df["plain"])
+    dim = 36  # two words, the second partly filled
+    plain = S.binary_sign_words("plain", dim)
+    odd = S.binary_sign_words("we`ird ``name", dim)
+    got = df.select("vec_id", *[w.alias(f"p{j}") for j, w in enumerate(plain)],
+                    *[w.alias(f"o{j}") for j, w in enumerate(odd)]
+                    ).orderBy("vec_id").collect()
+    assert [(r.p0, r.p1) for r in got] == [(r.o0, r.o1) for r in got]
+    assert got[0].p0 == sum(1 << i for i in range(32) if i % 4 in (0, 2))
