@@ -18,29 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from demo_apache_flink_streaming_mode_spark.operators.scale import (
-    cut_lineage, deterministic_folds)
-
-
-def _contrib_sum(contribs: DataFrame) -> DataFrame:
-    """Per-vertex sum of rank contributions ``c``, in two
-    session-selectable shapes (``spark.graft.deterministicFolds``):
-
-    - deterministic (default): in-ascending-u-order left fold —
-      bit-stable across partitionings and engines (the oracle-parity
-      path), but buffers each vertex's in-neighbor contribution list,
-      O(in-degree) at a hub vertex;
-    - fast: plain ``F.sum`` — map-side-combinable, bounded memory at
-      any degree skew (the production path at 100 TB), last-ulp
-      nondeterminism only.
-
-    Tolerance + plan test: ``tests/test_scale_ops.py``.
-    """
-    if deterministic_folds(contribs):
-        return (contribs.groupBy("vertex")
-                .agg(F.aggregate(
-                    F.array_sort(F.collect_list(F.struct("u", "c"))),
-                    F.lit(0.0), lambda acc, s: acc + s["c"]).alias("s")))
-    return contribs.groupBy("vertex").agg(F.sum("c").alias("s"))
+    cut_lineage, ordered_sum)
 
 
 def pagerank(edges: DataFrame, iters: int = 3, damping: float = 0.85,
@@ -48,13 +26,13 @@ def pagerank(edges: DataFrame, iters: int = 3, damping: float = 0.85,
     """PageRank over a directed edge list, ``iters`` exact rounds.
 
     pr_{t+1}(v) = (1-d)/N + d * sum_{(u,v) in E} pr_t(u) / outdeg(u),
-    with the sum folded in ascending-u order (bit-stable across
-    partitionings and engines; production jobs on skewed-degree graphs
-    set ``spark.graft.deterministicFolds=false`` for a
-    map-side-combinable plain sum — see :func:`_contrib_sum`). Vertices with no in-edges keep the
-    base term. Dangling mass is NOT redistributed — callers whose
-    edge lists are symmetric (every edge has a reverse) have no
-    dangling vertices, and that is the documented contract here.
+    with the sum folded in ascending-u order (``ordered_sum``:
+    bit-stable across partitionings and engines; it buffers each
+    vertex's in-neighbor contributions, O(in-degree) at a hub).
+    Vertices with no in-edges keep the base term. Dangling mass is NOT
+    redistributed — callers whose edge lists are symmetric (every edge
+    has a reverse) have no dangling vertices, and that is the
+    documented contract here.
 
     Returns (vertex, pagerank) for every vertex appearing in the edge
     list.
@@ -90,7 +68,8 @@ def pagerank(edges: DataFrame, iters: int = 3, damping: float = 0.85,
                     .select(F.col("v").alias("vertex"), "u",
                             (F.col("pr_u") / F.col("odeg").cast("double"))
                             .alias("c")))
-        summed = _contrib_sum(contribs)
+        summed = contribs.groupBy("vertex").agg(
+            ordered_sum("u", "c").alias("s"))
         pr = (pr.select("vertex", "n").join(summed, "vertex", "left")
               .select("vertex", "n",
                       ((F.lit(1.0 - damping) / F.col("n").cast("double"))

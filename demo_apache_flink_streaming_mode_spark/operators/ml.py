@@ -16,8 +16,8 @@ KNOWN linear function of bounded features), thresholded at
   planted weights (0.4, 0.4, 0.2 and a zero bias) — the recovery test
   pins that, and classifier agreement at the threshold is ~1.
 * ``train_quality_gd`` — ITERATIVE: ``QF_GD_ITERS`` full-batch
-  gradient-descent steps on the squared loss, each ONE map-side-
-  combinable aggregation of d gradient sums (the allreduce shape);
+  gradient-descent steps on the squared loss, each ONE aggregation
+  of d gradient sums (the allreduce shape);
   emits the per-iteration MSE learning curve, which must strictly
   decrease.
 
@@ -25,11 +25,9 @@ Everything is oracle-reproducible to the bit:
 
 * only +, -, * and one final / are used — no exp/log, whose libm
   implementations differ between the JVM and DuckDB;
-* gradient/Gram reductions follow the repo's dual-path convention
-  (``operators.scale.deterministic_folds``): in-doc_id-order left
-  folds for bit-exact parity (buffers the corpus — the parity path)
-  or plain ``F.sum`` partial aggregation for bounded memory at 100 TB
-  (the production path, last-ulp nondeterminism only);
+* every gradient/Gram reduction is an in-doc_id-order left fold
+  (``operators.scale.ordered_sum``), never a parallel ``F.sum`` whose
+  partition order would move the last ulp;
 * the Cramer determinant expansions are GENERATED ONCE as expression
   strings (``cramer_weight_exprs``) that the driver-side arithmetic
   interpreter (``eval_arith`` — an ast walk over names/+,-,*,/ only,
@@ -52,7 +50,7 @@ from pyspark.sql import Column, DataFrame, functions as F
 
 from demo_apache_flink_streaming_mode_spark.operators import text
 from demo_apache_flink_streaming_mode_spark.operators.scale import (
-    deterministic_folds)
+    ordered_sum)
 
 QF_THRESHOLD = 0.525           # ~median quality_score at every SF
 QF_GD_ITERS = 3
@@ -169,28 +167,18 @@ def eval_arith(expr: str, names: dict[str, float]) -> float:
     return walk(ast.parse(expr, mode="eval"))
 
 
-def _fold_sum(df: DataFrame, terms: dict[str, Column], det: bool,
+def _fold_sum(df: DataFrame, terms: dict[str, Column],
               count_alias: str | None = None) -> dict[str, float]:
-    """Sum each term column over the frame: in-doc_id-order left folds
-    (parity path) or plain partial-aggregated sums (production path).
-    ``count_alias`` additionally rides a row count in the SAME
-    aggregation (and the returned dict), saving callers a separate
-    count job."""
-    if det:
-        aggs = [F.aggregate(
-            F.array_sort(F.collect_list(F.struct("doc_id",
-                                                 col.alias("v")))),
-            F.lit(0.0), lambda acc, s: acc + s["v"]).alias(name)
+    """Sum each term column over the frame as an in-doc_id-order left
+    fold (0.0 for an empty frame). ``count_alias`` additionally rides a
+    row count in the SAME aggregation (and the returned dict), saving
+    callers a separate count job."""
+    aggs = [ordered_sum("doc_id", col).alias(name)
             for name, col in terms.items()]
-    else:
-        aggs = [F.sum(col).alias(name) for name, col in terms.items()]
     if count_alias is not None:
         aggs.append(F.count(F.lit(1)).alias(count_alias))
     row = df.agg(*aggs).collect()[0]
-    # empty frame: F.sum yields NULL (the fold path yields 0.0); map to
-    # 0.0 — callers never read the sums when the ridden count is 0
-    out = {name: float(row[name]) if row[name] is not None else 0.0
-           for name in terms}
+    out = {name: float(row[name]) for name in terms}
     if count_alias is not None:
         out[count_alias] = float(row[count_alias])
     return out
@@ -199,7 +187,7 @@ def _fold_sum(df: DataFrame, terms: dict[str, Column], det: bool,
 def fit_quality_weights(feats: DataFrame) -> tuple[list[float], int]:
     """THE closed-form training pass, single-sourced: one distributed
     sufficient-statistics aggregation (the d*(d+1)/2 Gram entries and
-    d moments, dual-path folds) + the driver-side Cramer solve over
+    d moments, in-order folds) + the driver-side Cramer solve over
     the shared expression strings. Returns ``(weights, n_docs)`` —
     ``([], 0)`` for an empty corpus. Every ml_filter surface that
     needs trained weights (probe report, serve filter, calibration,
@@ -219,8 +207,7 @@ def fit_quality_weights(feats: DataFrame) -> tuple[list[float], int]:
                                        * F.col(f"x{j + 1}"))
     for i in range(QF_D):
         terms[f"b{i}"] = F.col(f"x{i + 1}") * F.col("s")
-    stats = _fold_sum(feats, terms, deterministic_folds(feats),
-                      count_alias="_n")
+    stats = _fold_sum(feats, terms, count_alias="_n")
     n = int(stats.pop("_n"))
     if n == 0:
         return [], 0
@@ -269,7 +256,6 @@ def train_quality_gd(docs: DataFrame, iters: int = QF_GD_ITERS,
     if n == 0:
         feats.unpersist()
         return spark.createDataFrame([], schema)
-    det = deterministic_folds(feats)
     w = [0.0] * QF_D
 
     def dot_col() -> Column:
@@ -280,7 +266,7 @@ def train_quality_gd(docs: DataFrame, iters: int = QF_GD_ITERS,
 
     def mse() -> float:
         r = dot_col() - F.col("s")
-        return _fold_sum(feats, {"sq": r * r}, det)["sq"] / float(n)
+        return _fold_sum(feats, {"sq": r * r})["sq"] / float(n)
 
     curve = [(0, mse(), int(n))]
     for t in range(1, iters + 1):
@@ -288,7 +274,7 @@ def train_quality_gd(docs: DataFrame, iters: int = QF_GD_ITERS,
         grads = _fold_sum(
             feats,
             {f"g{j}": (F.lit(2.0) * r) * F.col(f"x{j + 1}")
-             for j in range(QF_D)}, det)
+             for j in range(QF_D)})
         w = [w[j] - lr * (grads[f"g{j}"] / float(n)) for j in range(QF_D)]
         curve.append((t, mse(), int(n)))
     feats.unpersist()
@@ -326,8 +312,8 @@ def train_quality_logit(docs: DataFrame, iters: int = QF_LOGIT_ITERS,
     mean(2*(p - y) * p'(z) * x_j) with p'(z) = 0.5/(1+|z|)^2 — all
     +,-,*,abs and exactly-rounded division, so every step is
     bit-reproducible on any engine (no exp/log anywhere, see
-    ``_alg_sigmoid``). One map-side-combinable d-sum aggregation per
-    step (the allreduce shape), model returns as literals.
+    ``_alg_sigmoid``). One d-sum aggregation per step (the allreduce
+    shape), model returns as literals.
 
     Emits the learning curve (iter, sq_loss, train_acc, n_docs): iter
     0 is the untrained model (w = 0, p = 0.5 everywhere); sq_loss must
@@ -341,7 +327,6 @@ def train_quality_logit(docs: DataFrame, iters: int = QF_LOGIT_ITERS,
     if n == 0:
         feats.unpersist()
         return spark.createDataFrame([], schema)
-    det = deterministic_folds(feats)
     th = F.lit(QF_THRESHOLD)
     y = F.when(F.col("s") >= th, F.lit(1.0)).otherwise(F.lit(0.0))
     w = [0.0] * QF_D
@@ -355,7 +340,7 @@ def train_quality_logit(docs: DataFrame, iters: int = QF_LOGIT_ITERS,
     def point() -> tuple[float, float]:
         z = z_col()
         p = _alg_sigmoid(z)
-        loss = _fold_sum(feats, {"sq": (p - y) * (p - y)}, det)["sq"] / float(n)
+        loss = _fold_sum(feats, {"sq": (p - y) * (p - y)})["sq"] / float(n)
         acc = feats.agg(
             (F.sum(F.when((z >= F.lit(0.0)) == (F.col("s") >= th),
                           F.lit(1)).otherwise(F.lit(0))).cast("double")
@@ -371,7 +356,7 @@ def train_quality_logit(docs: DataFrame, iters: int = QF_LOGIT_ITERS,
         grads = _fold_sum(
             feats,
             {f"g{j}": (F.lit(2.0) * (p - y)) * dp * F.col(f"x{j + 1}")
-             for j in range(QF_D)}, det)
+             for j in range(QF_D)})
         w = [w[j] - lr * (grads[f"g{j}"] / float(n)) for j in range(QF_D)]
         curve.append((t, *point(), int(n)))
     feats.unpersist()
@@ -436,13 +421,10 @@ def calibration_report(docs: DataFrame, text_col: str = "text",
 
     Engine-portable like the trainers: the bin id is one floor of a
     shared double (bit-identical across engines), per-bin double sums
-    follow the dual-path fold convention
-    (``operators.scale.deterministic_folds``: in-doc_id-order left
-    folds for oracle parity, plain ``F.sum`` for bounded memory at
-    100 TB), keep counts are integers. Scale shape: one projection
-    pass + one bounded groupBy (<= QF_CAL_BUCKETS groups) — the whole
-    report is a single map-side-combinable aggregation after the
-    training pass. Pass ``weights=`` to reuse an already-fitted model
+    are in-doc_id-order left folds (``operators.scale.ordered_sum``),
+    keep counts are integers. Scale shape: one projection pass + one
+    bounded groupBy (<= QF_CAL_BUCKETS groups) — the whole report is a
+    single aggregation after the training pass. Pass ``weights=`` to reuse an already-fitted model
     and skip the training aggregation."""
     feats = quality_filter_features(docs, text_col)
     spark = docs.sparkSession
@@ -455,8 +437,7 @@ def calibration_report(docs: DataFrame, text_col: str = "text",
         weights, n = fit_quality_weights(feats)
         if n == 0:
             return spark.createDataFrame([], schema)
-    return _calibration_agg(_bucketize(feats, weights),
-                            deterministic_folds(feats))
+    return _calibration_agg(_bucketize(feats, weights))
 
 
 def _bucketize(feats: DataFrame, w: list[float]) -> DataFrame:
@@ -470,23 +451,14 @@ def _bucketize(feats: DataFrame, w: list[float]) -> DataFrame:
                 F.lit(QF_CAL_BUCKETS - 1)).cast("int").alias("bucket"))
 
 
-def _calibration_agg(b: DataFrame, det: bool) -> DataFrame:
+def _calibration_agg(b: DataFrame) -> DataFrame:
     """The <= QF_CAL_BUCKETS-group reliability aggregate over a
-    ``_bucketize`` frame (dual-path double folds, integer keeps)."""
-    if det:
-        def fold(col: str) -> Column:
-            return F.aggregate(
-                F.array_sort(F.collect_list(
-                    F.struct("doc_id", F.col(col).alias("v")))),
-                F.lit(0.0), lambda acc, s: acc + s["v"])
-    else:
-        def fold(col: str) -> Column:
-            return F.sum(col)
+    ``_bucketize`` frame (in-order double folds, integer keeps)."""
     th = F.lit(QF_THRESHOLD)
     agg = (b.groupBy("bucket")
            .agg(F.count("*").alias("n_docs"),
-                fold("pred").alias("sum_pred"),
-                fold("s").alias("sum_s"),
+                ordered_sum("doc_id", "pred").alias("sum_pred"),
+                ordered_sum("doc_id", "s").alias("sum_s"),
                 F.sum((F.col("pred") >= th).cast("long"))
                 .alias("n_keep_pred"),
                 F.sum((F.col("s") >= th).cast("long"))
@@ -533,7 +505,7 @@ def train_apply_calibrate(docs: DataFrame,
     if n == 0:
         return spark.createDataFrame([], schema)
     b = _bucketize(feats, w)
-    cal = _calibration_agg(b, deterministic_folds(feats)).select(
+    cal = _calibration_agg(b).select(
         "bucket", F.col("n_docs").alias("bucket_n_docs"),
         F.col("cal_gap").alias("bucket_cal_gap"))
     return (b.join(F.broadcast(cal), "bucket")

@@ -11,38 +11,38 @@ helpers cover the cases AQE can't fix:
 
 Results are bitwise-identical to the unsalted equivalents: salting only
 re-routes rows; multiplicity and values are untouched.
+
+The module also holds the engine's one ordered double fold
+(``ordered_sum``) and the lineage cut of iterative operators.
 """
 
 from __future__ import annotations
 
 import tempfile
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import Column, DataFrame, functions as F
 
 RELIABLE_CHECKPOINT_CONF = "spark.graft.reliableCheckpoint"
-DETERMINISTIC_FOLDS_CONF = "spark.graft.deterministicFolds"
 
 
-def deterministic_folds(df: DataFrame) -> bool:
-    """Session switch for the iterative trainers' float reductions
-    (k-means / PQ codebook means, PageRank contribution sums).
+def ordered_sum(order: str | Column, value: str | Column) -> Column:
+    """Aggregate expression: the sum of ``value`` over the group, added
+    left to right in ascending ``order`` starting from 0.0 (0.0 for an
+    empty group).
 
-    - true (default): explicit in-id-order ``collect_list`` +
-      ``F.aggregate`` left folds — bit-exact across engines, runs, and
-      partitionings (the oracle-parity path), but buffers each group's
-      values, O(group size) at a hot cell / hub vertex.
-    - false: plain ``avg``/``sum`` — map-side combinable partial
-      aggregation, bounded executor memory at any key skew (the
-      production path at 100 TB), nondeterministic only in the last
-      ulp of the double sum.
-
-    The two paths are tied together by tolerance tests
-    (``tests/test_scale_ops.py``); flip the conf off for production
-    training jobs where a popular cell would make a ``collect_list``
-    buffer the straggler.
+    The engine's scalar double folds (trainer statistics, PageRank
+    contributions, ADC distances, report sums) all use this one
+    expression. A plain ``F.sum`` adds partial sums in whatever order
+    the partitions arrive, so its last ulp depends on partitioning;
+    this fold does not, and it equals the oracle's in-order SQL list
+    reduction bit for bit. ``order`` should be unique within a group
+    (ties sort by value, still deterministic). The cost is buffering
+    each group's (order, value) pairs: O(group size) at a hot key.
     """
-    return (df.sparkSession.conf.get(DETERMINISTIC_FOLDS_CONF, "true")
-            .lower() == "true")
+    v = F.col(value) if isinstance(value, str) else value
+    return F.aggregate(
+        F.array_sort(F.collect_list(F.struct(order, v.alias("v")))),
+        F.lit(0.0), lambda acc, s: acc + s["v"])
 
 
 def cut_lineage(df: DataFrame) -> DataFrame:

@@ -27,7 +27,7 @@ from pyspark.sql import Column, DataFrame, Window as W, functions as F
 from demo_apache_flink_streaming_mode_spark.functions.scalars import (
     dot, dot_literal, dot_literal_sql, dot_unrolled, norm)
 from demo_apache_flink_streaming_mode_spark.operators.scale import (
-    cut_lineage, deterministic_folds)
+    cut_lineage, ordered_sum)
 
 
 def _dot(a: Column, b: Column, dim: int | None) -> Column:
@@ -264,69 +264,26 @@ def seed_centroids(u: DataFrame, n_cells: int,
 def _mean_vectors(asg: DataFrame, group_cols: list[str], id_col: str,
                   vec_col: str, out: str) -> DataFrame:
     """Per-group component-wise mean of a VECTOR column — the Lloyd's
-    update step, in the two session-selectable shapes of
-    ``spark.graft.deterministicFolds``:
-
-    - deterministic (default): ONE exchange of (id, vector) rows per
-      group; each group collects its members sorted by id and every
-      dimension is an in-id-order left fold over that one list.
-      Bit-identical to the previous posexplode + per-(group, pos)
-      fold + per-group rebuild (same addends in the same IEEE order —
-      member j-th components ascending by unique id, starting from
-      0.0 — and the same divisor, the member count), but one exchange,
-      one Generate, and one N*dim-row HashAggregate cheaper per
-      training iteration (r12, guide §2.3/§2.4: the old shape
-      shuffled N*dim (keys, id, val) rows and then re-aggregated the
-      dim*cells results; this ships N (id, vector) rows once).
-      Measured: kmeans 2-iter training construct 1.98s -> 0.99s,
-      pq_train 0.83s -> 0.66s at sf0.1, parity bit-exact.
-    - fast: the map-side-combinable ``F.avg`` explode shape, unchanged
-      (:func:`_fold_mean`), bounded executor memory at any cell skew.
+    update step. ONE exchange of (id, vector) rows per group; each group
+    collects its members sorted by id and every dimension is an
+    in-id-order left fold over that one list (member j-th components
+    ascending by unique id, starting from 0.0), divided by the member
+    count. Bit-exact across engines and partitionings; buffers O(group
+    size) per group. Shipping whole vectors rather than N*dim (id, pos,
+    val) rows saves an exchange, a Generate and an N*dim-row
+    HashAggregate per training iteration (kmeans 2-iter training
+    construct 1.98s -> 0.99s, pq_train 0.83s -> 0.66s at sf0.1).
     """
-    if deterministic_folds(asg):
-        vals = F.array_sort(F.collect_list(F.struct(
-            F.col(id_col).alias("_vid"), F.col(vec_col).alias("_v"))))
-        per_dim = F.transform(
-            F.sequence(F.lit(1), F.size(F.element_at(F.col("_vals"), 1)["_v"])),
-            lambda j: F.aggregate(
-                F.col("_vals"), F.lit(0.0),
-                lambda acc, s: acc + F.element_at(s["_v"], j))
-            / F.size(F.col("_vals")))
-        return (asg.groupBy(*group_cols).agg(vals.alias("_vals"))
-                .select(*group_cols, per_dim.alias(out)))
-    expl = asg.select(F.col(id_col).alias("_vid"), *group_cols,
-                      F.posexplode(F.col(vec_col)).alias("pos", "val"))
-    dims = _fold_mean(expl, group_cols + ["pos"], "_m")
-    return (dims.groupBy(*group_cols)
-            .agg(F.array_sort(F.collect_list(F.struct("pos", "_m")))
-                 .alias("_ms"))
-            .select(*group_cols,
-                    F.transform("_ms", lambda s: s["_m"]).alias(out)))
-
-
-def _fold_mean(expl: DataFrame, group_cols: list[str],
-               out: str) -> DataFrame:
-    """Per-group mean of ``val``, in two session-selectable shapes
-    (``spark.graft.deterministicFolds``, see ``operators.scale``):
-
-    - deterministic (default): collect the group's (_vid, val) structs,
-      sort by id, left-fold the sum — bit-exact across engines and
-      partitionings, but buffers O(group size) per group;
-    - fast: plain ``F.avg`` — map-side-combinable partial aggregation,
-      bounded executor memory at any key skew, last-ulp nondeterminism.
-
-    Shared by the k-means and PQ trainers; the two paths are tied by a
-    tolerance + plan test in ``tests/test_scale_ops.py``.
-    """
-    if deterministic_folds(expl):
-        return (expl.groupBy(*group_cols)
-                .agg(F.array_sort(
-                    F.collect_list(F.struct("_vid", "val"))).alias("vals"))
-                .select(*group_cols,
-                        (F.aggregate("vals", F.lit(0.0),
-                                     lambda acc, s: acc + s["val"])
-                         / F.size("vals")).alias(out)))
-    return expl.groupBy(*group_cols).agg(F.avg("val").alias(out))
+    vals = F.array_sort(F.collect_list(F.struct(
+        F.col(id_col).alias("_vid"), F.col(vec_col).alias("_v"))))
+    per_dim = F.transform(
+        F.sequence(F.lit(1), F.size(F.element_at(F.col("_vals"), 1)["_v"])),
+        lambda j: F.aggregate(
+            F.col("_vals"), F.lit(0.0),
+            lambda acc, s: acc + F.element_at(s["_v"], j))
+        / F.size(F.col("_vals")))
+    return (asg.groupBy(*group_cols).agg(vals.alias("_vals"))
+            .select(*group_cols, per_dim.alias(out)))
 
 
 def kmeans_centroids(u: DataFrame, n_cells: int, iters: int,
@@ -340,20 +297,18 @@ def kmeans_centroids(u: DataFrame, n_cells: int, iters: int,
     Deterministic & oracle-reproducible by construction:
     - seeds are the `n_cells` lowest-id vectors (``seed_centroids``);
     - the per-dimension mean is an explicit in-id-order left fold
-      (collect the cell's values sorted by id, then ``F.aggregate``),
-      NOT ``F.avg`` — a parallel double sum is partition-order-dependent
-      in the last ulp, which would break bit-exact cross-engine parity
-      and run-to-run stability.  Production jobs at skewed cell sizes
-      set ``spark.graft.deterministicFolds=false`` to swap the fold for
-      a map-side-combinable ``F.avg`` (see :func:`_fold_mean`);
+      (:func:`_mean_vectors`: collect the cell's members sorted by id,
+      then ``F.aggregate``), NOT ``F.avg`` — a parallel double sum is
+      partition-order-dependent in the last ulp, which would break
+      bit-exact cross-engine parity and run-to-run stability;
     - degenerate zero-norm vectors (NULL components after the
       ``_safe_nrm`` guard) are excluded from training on both engines.
 
     Scale shape per iteration: assignment is a broadcast pass over the
-    corpus (centroid side is n_cells rows); the update shuffles N*dim
-    (id, cell, pos, val) rows once on (cell, pos) — linear, map-side
-    combinable into ObjectHashAggregate. Empty cells drop out, as in
-    standard Lloyd's. Cost: iters linear passes; run it offline and
+    corpus (centroid side is n_cells rows); the update ships N (id,
+    vector) rows in one exchange on cell and folds each cell's sorted
+    member list — linear, O(cell size) buffered per cell. Empty cells
+    drop out, as in standard Lloyd's. Cost: iters linear passes; run it offline and
     reuse the codebook across queries at 100 TB.
     """
     u = u.filter(F.col(vec_col).getItem(0).isNotNull())
@@ -609,11 +564,11 @@ def pq_train_codebooks(u: DataFrame, m_sub: int, sub_dim: int,
 
     Same determinism contract as ``kmeans_centroids``: seeds are the
     `n_codes` lowest-id subvectors of each subspace, means are explicit
-    in-id-order left folds (or map-side ``avg`` under
-    ``spark.graft.deterministicFolds=false``), empty codes drop out. Scale shape per
-    iteration: assignment is one broadcast pass over N*m_sub subvector
-    rows; the update shuffles N*dim (m, code, pos, val) rows once —
-    linear, map-side combinable. Train offline, reuse the codebook.
+    in-id-order left folds (:func:`_mean_vectors`), empty codes drop
+    out. Scale shape per iteration: assignment is one broadcast pass
+    over N*m_sub subvector rows; the update ships N*m_sub (id,
+    subvector) rows in one exchange on (m, code) — linear, O(code size)
+    buffered per code. Train offline, reuse the codebook.
     """
     sub = pq_subvectors(u, m_sub, sub_dim, id_col, vec_col)
     # Seeds: every vector contributes one subvector to EVERY subspace,
@@ -729,9 +684,7 @@ def topk_pq(queries: DataFrame, corpus: DataFrame, k: int, m_sub: int,
     scored = (codes.join(F.broadcast(dtab), ["m", "code"])
               .filter(F.col("query_id") != F.col("neighbor_id"))
               .groupBy("query_id", "neighbor_id")
-              .agg(F.aggregate(
-                  F.array_sort(F.collect_list(F.struct("m", "d"))),
-                  F.lit(0.0), lambda acc, s: acc + s["d"]).alias("adc_dist")))
+              .agg(ordered_sum("m", "d").alias("adc_dist")))
     w = W.partitionBy("query_id").orderBy(F.asc("adc_dist"),
                                           F.asc("neighbor_id"))
     return (scored.withColumn("rank", F.row_number().over(w))
@@ -1181,10 +1134,7 @@ def topk_ivfpq(queries: DataFrame, corpus: DataFrame, k: int, n_cells: int,
     scored = (codes.join(F.broadcast(dtab), ["cell", "m", "code"])
               .filter(F.col("query_id") != F.col("neighbor_id"))
               .groupBy("query_id", "neighbor_id")
-              .agg(F.aggregate(
-                  F.array_sort(F.collect_list(F.struct("m", "d"))),
-                  F.lit(0.0), lambda acc, s: acc + s["d"])
-                  .alias("adc_dist")))
+              .agg(ordered_sum("m", "d").alias("adc_dist")))
     w = W.partitionBy("query_id").orderBy(F.asc("adc_dist"),
                                           F.asc("neighbor_id"))
     return (scored.withColumn("rank", F.row_number().over(w))

@@ -17,6 +17,7 @@ from pyspark.sql import Column, DataFrame, functions as F
 from demo_apache_flink_streaming_mode_spark.functions.scalars import hex_to_long
 from demo_apache_flink_streaming_mode_spark.operators.dedup import (
     doc_shingles, word_shingles, word_tokens)
+from demo_apache_flink_streaming_mode_spark.operators.scale import ordered_sum
 
 # Marker stopword lists per language (tiny on purpose: the mechanism —
 # score-per-language + deterministic argmax — is the operator; swap in
@@ -894,17 +895,13 @@ def source_drift_report(docs: DataFrame,
       counts; same grid-avoidance: sum_t over present terms of
       ((obs-e)^2/e - e) + n_src, since absent terms contribute exactly
       e and all e sum to n_src. Doubles, so the per-source reduction
-      follows the dual-path fold convention
-      (``operators.scale.deterministic_folds``): in-term-order left
-      folds for oracle parity, plain ``F.sum`` for bounded memory.
+      is an in-term-order left fold (``operators.scale.ordered_sum``).
 
     Scale shape: one vocab-bounded shuffle for the per-source counts
     (map-side combinable), the corpus table reuses the same counts, the
     1-row corpus total attaches by broadcast, and the final aggregate
     has one row per source.
     """
-    from demo_apache_flink_streaming_mode_spark.operators.scale import (
-        deterministic_folds)
     tok = docs.select("source",
                       F.explode(word_tokens(F.col(text_col))).alias("term"))
     stf = tok.groupBy("source", "term").agg(F.count("*").alias("obs"))
@@ -916,16 +913,8 @@ def source_drift_report(docs: DataFrame,
          .crossJoin(F.broadcast(nt)))
     e = F.col("tf_c").cast("double") * F.col("n_tokens") / F.col("n_total")
     d = F.col("obs") - e
-    chi_term = d * d / e - e
-    if deterministic_folds(j):
-        chi_part = F.aggregate(
-            F.array_sort(F.collect_list(
-                F.struct("term", chi_term.alias("v")))),
-            F.lit(0.0), lambda acc, s: acc + s["v"])
-    else:
-        chi_part = F.sum(chi_term)
     per = (j.groupBy("source")
-           .agg(chi_part.alias("chi_part"),
+           .agg(ordered_sum("term", d * d / e - e).alias("chi_part"),
                 F.sum(F.abs(F.col("obs") * F.col("n_total")
                             - F.col("tf_c") * F.col("n_tokens")))
                 .alias("tv_present"),

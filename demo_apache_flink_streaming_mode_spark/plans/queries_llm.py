@@ -948,9 +948,7 @@ def text_mixture_plan(spark, sf_dir):
            .agg(F.count("*").alias("n_docs"),
                 F.sum(toks).cast("long").alias("n_tokens")))
     stats = agg.withColumn("w", F.sqrt(F.col("n_tokens").cast("double")))
-    total = (stats.agg(F.aggregate(
-        F.array_sort(F.collect_list(F.struct("source", "w"))),
-        F.lit(0.0), lambda acc, s: acc + s["w"]).alias("tw")))
+    total = stats.agg(scale.ordered_sum("source", "w").alias("tw"))
     share = F.col("w") / F.col("tw")
     return (stats.crossJoin(F.broadcast(total))
             .select("source", "n_docs", "n_tokens",

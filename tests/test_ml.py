@@ -1,7 +1,7 @@
 """Behavior tests for the distributed linear-model trainers
 (operators.ml): planted-weight recovery for the closed-form probe, a
-strictly decreasing GD learning curve, the dual-path fold contract,
-and the safety/portability of the generated Cramer expressions.
+strictly decreasing GD learning curve, and the safety/portability of
+the generated Cramer expressions.
 
 (Oracle parity — Spark vs DuckDB hash equality of both queries — runs
 in test_correctness.py over the registry like every other query.)
@@ -14,8 +14,6 @@ import re
 import pytest
 
 from demo_apache_flink_streaming_mode_spark.operators import ml
-from demo_apache_flink_streaming_mode_spark.operators.scale import (
-    DETERMINISTIC_FOLDS_CONF)
 from demo_apache_flink_streaming_mode_spark.sources.batch import load_table
 
 
@@ -61,24 +59,6 @@ def test_logit_curve_decreases_and_classifier_learns(spark, docs):
     assert rows[ml.QF_LOGIT_ITERS][1] > rows[0][1] + 0.2
 
 
-def test_logit_fast_fold_path_matches_within_tolerance(spark, docs):
-    """The classifier's production aggregation path (plain F.sum) must
-    agree with the parity path's in-id-order folds to float
-    tolerance on the whole learning curve."""
-    det = {r["iter"]: (r["sq_loss"], r["train_acc"])
-           for r in ml.train_quality_logit(docs).collect()}
-    spark.conf.set(DETERMINISTIC_FOLDS_CONF, "false")
-    try:
-        fast = {r["iter"]: (r["sq_loss"], r["train_acc"])
-                for r in ml.train_quality_logit(docs).collect()}
-    finally:
-        spark.conf.unset(DETERMINISTIC_FOLDS_CONF)
-    assert set(det) == set(fast)
-    for t in det:
-        assert abs(det[t][0] - fast[t][0]) < 1e-9
-        assert det[t][1] == fast[t][1]  # integer-exact decisions
-
-
 def test_alg_sigmoid_shape(spark):
     """p(0)=0.5, monotone, symmetric, saturating — the properties that
     make the rational softsign a drop-in sigmoid."""
@@ -91,34 +71,6 @@ def test_alg_sigmoid_shape(spark):
     assert all(p[i] < p[i + 1] for i in range(len(p) - 1))
     assert p[0] > 0.0 and p[-1] < 1.0  # saturates but never reaches
     assert abs((1 - p[1]) - p[5]) < 1e-15  # symmetry around 0.5
-
-
-def test_fast_fold_path_matches_within_tolerance(spark, docs):
-    """The production aggregation path (plain F.sum partial
-    aggregation, bounded memory) must agree with the parity path's
-    in-doc_id-order folds to float tolerance, and its plan must not
-    buffer the corpus (no collect_list)."""
-    det = {r["feature"]: r["weight"]
-           for r in ml.train_quality_probe(docs).collect()}
-    feats = ml.quality_filter_features(docs)
-    spark.conf.set(DETERMINISTIC_FOLDS_CONF, "false")
-    try:
-        fast = {r["feature"]: r["weight"]
-                for r in ml.train_quality_probe(docs).collect()}
-        # the fast path's stats plan must aggregate without buffering
-        # the corpus into lists: inspect the exact aggregation
-        # _fold_sum builds under the toggled conf
-        import pyspark.sql.functions as F
-        from demo_apache_flink_streaming_mode_spark.operators.scale import (
-            deterministic_folds)
-        assert not deterministic_folds(feats)
-        agg_plan = (feats.agg(F.sum(feats["x1"] * feats["x1"]).alias("a00"))
-                    ._jdf.queryExecution().optimizedPlan().toString())
-        assert "collect_list" not in agg_plan
-    finally:
-        spark.conf.unset(DETERMINISTIC_FOLDS_CONF)
-    for k in det:
-        assert abs(det[k] - fast[k]) < 1e-9, (k, det[k], fast[k])
 
 
 def test_cramer_exprs_are_portable_and_safe():

@@ -2,7 +2,12 @@
 
 from __future__ import annotations
 
+import functools
+import operator
+
+import hypo
 import pytest
+from hypothesis import given, strategies as st
 from pyspark.sql import functions as F
 
 from demo_apache_flink_streaming_mode_spark.operators.joins import asof_join
@@ -274,70 +279,60 @@ def test_pagerank_star_graph(spark):
     assert got == got2
 
 
-def test_fast_folds_match_deterministic_within_tolerance(spark, unit_vecs):
-    """spark.graft.deterministicFolds=false swaps the iterative
-    trainers' in-id-order collect_list folds for plain avg/sum
-    (map-side combinable, bounded memory at hot keys). The two paths
-    must agree to float tolerance, and the fast path's plan must not
-    buffer per-value lists (no _vid fold column; pagerank: no
-    collect_list at all)."""
-    from demo_apache_flink_streaming_mode_spark.operators.graph import pagerank
+# --- ordered_sum ----------------------------------------------------------
+
+# doubles from 1e-15 to 1e15 in magnitude, both signs: summation order
+# changes the rounded result for most groups of such values
+_wide_double = st.builds(lambda m, e, neg: (-m if neg else m) * 10.0 ** e,
+                         st.floats(1.0, 10.0), st.integers(-15, 15),
+                         st.booleans())
+
+
+@st.composite
+def _shuffled_groups(draw):
+    """(g, k, v) rows: up to 5 groups, order keys k unique and assigned
+    in an order unrelated to the row order."""
+    groups = draw(st.lists(st.lists(_wide_double, min_size=1, max_size=12),
+                           min_size=1, max_size=5))
+    vals = [(g, v) for g, vs in enumerate(groups) for v in vs]
+    keys = draw(st.permutations(range(len(vals))))
+    return draw(st.permutations(
+        [(g, k, v) for (g, v), k in zip(vals, keys)]))
+
+
+def _key_order_sum(rows):
+    return functools.reduce(operator.add,
+                            [v for _, v in sorted(rows)], 0.0)
+
+
+@hypo.budget(10)
+@given(rows=_shuffled_groups())
+def test_ordered_sum_property_is_key_order_left_fold(spark, rows):
+    """Grouped and global ``ordered_sum`` equal a Python left fold in
+    key order, bit for bit, whatever the partitioning."""
     from demo_apache_flink_streaming_mode_spark.operators.scale import (
-        DETERMINISTIC_FOLDS_CONF)
-    from demo_apache_flink_streaming_mode_spark.operators.similarity import (
-        kmeans_centroids, pq_train_codebooks)
+        ordered_sum)
+    by_g: dict[int, list] = {}
+    for g, k, v in rows:
+        by_g.setdefault(g, []).append((k, v))
+    want = {g: _key_order_sum(kv).hex() for g, kv in by_g.items()}
+    want_all = _key_order_sum([(k, v) for _, k, v in rows]).hex()
+    df = spark.createDataFrame(rows, "g int, k long, v double")
+    for parts in (1, 7):
+        d = df.repartition(parts)
+        got = {r["g"]: r["s"].hex() for r in
+               d.groupBy("g").agg(ordered_sum("k", "v").alias("s")).collect()}
+        assert got == want, parts
+        got_all = d.agg(ordered_sum("k", "v").alias("s")).collect()[0]["s"]
+        assert got_all.hex() == want_all, parts
 
-    edges = [(0, s) for s in range(1, 5)] + [(s, 0) for s in range(1, 5)]
-    edf = spark.createDataFrame(edges, "src long, dst long")
 
-    det_k = {r["cell"]: r["cv"]
-             for r in kmeans_centroids(unit_vecs, 4, iters=2, dim=4).collect()}
-    det_pq = {(r["m"], r["code"]): r["cv"]
-              for r in pq_train_codebooks(unit_vecs, 2, 2, 3, 1).collect()}
-    det_pr = {r["vertex"]: r["pagerank"]
-              for r in pagerank(edf, iters=3).collect()}
-
-    # plan contract, checked on the fold helpers themselves (the
-    # trainers' terminal plans sit behind cut_lineage checkpoints, so
-    # asserting there would be vacuous): fast path has NO collect_list
-    from demo_apache_flink_streaming_mode_spark.operators.graph import (
-        _contrib_sum)
-    from demo_apache_flink_streaming_mode_spark.operators.similarity import (
-        _fold_mean)
-    expl = spark.createDataFrame(
-        [(1, 0, 0, 0.5), (2, 0, 0, 1.5), (3, 1, 0, 2.0)],
-        "_vid long, cell int, pos int, val double")
-    contribs = spark.createDataFrame(
-        [(10, 1, 0.25), (10, 2, 0.5)], "vertex long, u long, c double")
-
-    def plan(df):
-        return df._jdf.queryExecution().optimizedPlan().toString()
-
-    assert "collect_list" in plan(_fold_mean(expl, ["cell", "pos"], "m"))
-    assert "collect_list" in plan(_contrib_sum(contribs))
-    spark.conf.set(DETERMINISTIC_FOLDS_CONF, "false")
-    try:
-        assert "collect_list" not in plan(_fold_mean(expl, ["cell", "pos"], "m"))
-        assert "collect_list" not in plan(_contrib_sum(contribs))
-        fast_k = {r["cell"]: r["cv"]
-                  for r in kmeans_centroids(unit_vecs, 4, iters=2,
-                                            dim=4).collect()}
-        fast_pq = {(r["m"], r["code"]): r["cv"]
-                   for r in pq_train_codebooks(unit_vecs, 2, 2, 3, 1).collect()}
-        fast_pr = {r["vertex"]: r["pagerank"]
-                   for r in pagerank(edf, iters=3).collect()}
-    finally:
-        spark.conf.unset(DETERMINISTIC_FOLDS_CONF)
-
-    assert set(det_k) == set(fast_k)
-    for cell, cv in det_k.items():
-        assert fast_k[cell] == pytest.approx(cv, rel=1e-9, abs=1e-12)
-    assert set(det_pq) == set(fast_pq)
-    for key, cv in det_pq.items():
-        assert fast_pq[key] == pytest.approx(cv, rel=1e-9, abs=1e-12)
-    assert set(det_pr) == set(fast_pr)
-    for v, pr in det_pr.items():
-        assert fast_pr[v] == pytest.approx(pr, rel=1e-9, abs=1e-12)
+def test_ordered_sum_of_empty_frame_is_zero(spark):
+    from demo_apache_flink_streaming_mode_spark.operators.scale import (
+        ordered_sum)
+    df = spark.createDataFrame([], "g int, k long, v double")
+    assert df.agg(ordered_sum("k", "v").alias("s")).collect()[0]["s"] == 0.0
+    assert df.groupBy("g").agg(ordered_sum("k", "v")).collect() == []
 
 
 def test_triangle_count_known_graph(spark):

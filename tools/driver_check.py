@@ -5,20 +5,28 @@ won't have them), imports __spark_entry__, smoke-checks entry(), then
 runs every queries() entry at the given sf dir and compares against
 oracle_sql() via DuckDB (row count + columns + order-insensitive
 values). Usage: python tools/driver_check.py [sf_dir]
+
+The driver heap is ``SPARK_DRIVER_MEM`` (a JVM size such as ``4g``),
+by default a quarter of host RAM, the rule ``tests/conftest.py`` uses.
 """
-import sys, time
-sys.path.insert(0, "/root/repo")
+import os, sys, time
+from pathlib import Path
+sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 from pyspark.sql import SparkSession
 
 sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
 
-# local[16]/32g, NOT bench.py's local[32]: correctness is
+# local[16], NOT bench.py's local[32]: correctness is
 # scale-independent, and the smaller footprint lets this gate run
 # alongside other work (sweeps, the driver's own runs) without
-# starving the host — bench owns the full-width configuration.
+# starving the host — bench owns the full-width configuration. A
+# fixed 32g heap let the JVM outgrow a 16 GB host and be OOM-killed
+# mid-run, so the heap follows the host.
+ram_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**20
+driver_mem = os.environ.get("SPARK_DRIVER_MEM", f"{ram_mb // 4}m")
 spark = (SparkSession.builder.master("local[16]")
          .config("spark.sql.shuffle.partitions", "16")
-         .config("spark.driver.memory", "32g")
+         .config("spark.driver.memory", driver_mem)
          .config("spark.ui.enabled", "false")
          .getOrCreate())
 spark.sparkContext.setLogLevel("ERROR")
