@@ -25,8 +25,8 @@ applies the same standard to two more real interchange formats:
   driven Huffman coder with libbzip2's own frequency-halving loop to
   enforce the 17-bit encoder length limit.
 
-Like the sibling codecs in ``operators.multimodal`` these run as
-Arrow-batched ``mapInPandas`` kernels — per-row-heavy byte work that
+Like the sibling codecs in ``operators.multimodal`` these run through
+``multimodal.per_payload`` — per-row-heavy byte work that
 parallelizes across executors with no shuffle beyond the ingest
 spread; the judged query paths decode stdlib-PRODUCED streams, so
 every driver row is an interoperability proof, not a self-roundtrip.
@@ -40,14 +40,11 @@ arrive in real compressed containers.
 from __future__ import annotations
 
 import struct
-from collections.abc import Iterator
-
-import pandas as pd
 
 from pyspark.sql import DataFrame
 
 from demo_apache_flink_streaming_mode_spark.operators.multimodal import (
-    _deflate_raw, _huff_table, _inflate_raw)
+    _deflate_raw, _huff_table, _inflate_raw, _px_stats, per_payload)
 
 # --- CRC-32 (reflected, ISO-HDLC / RFC 1952) -------------------------------
 
@@ -855,23 +852,11 @@ def gzip_decode_features(media: DataFrame) -> DataFrame:
     stdlib-compress -> from-scratch-decode path is lossless."""
     import gzip as _gz
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {k: [] for k in ("doc_id", "n_bytes", "n_members",
-                                   "sum_bytes", "max_byte", "mean_byte")}
-            for doc_id, payload in zip(pdf["doc_id"], pdf["media"]):
-                got, members = _gunzip(
-                    _gz.compress(bytes(payload), 9, mtime=0))
-                out["doc_id"].append(doc_id)
-                out["n_bytes"].append(len(got))
-                out["n_members"].append(members)
-                out["sum_bytes"].append(sum(got))
-                out["max_byte"].append(max(got) if got else 0)
-                out["mean_byte"].append(
-                    sum(got) / len(got) if got else 0.0)
-            yield pd.DataFrame(out)
+    def rows(doc_id, payload):
+        got, members = _gunzip(_gz.compress(payload, 9, mtime=0))
+        yield doc_id, len(got), members, sum(got), *_px_stats(got)
 
-    return media.mapInPandas(kernel, schema=GZIP_SCHEMA)
+    return per_payload(media, GZIP_SCHEMA, rows)
 
 
 def bz2_decode_features(media: DataFrame) -> DataFrame:
@@ -883,24 +868,12 @@ def bz2_decode_features(media: DataFrame) -> DataFrame:
     whole path; ``level``/``n_blocks`` pin the parsed structure."""
     import bz2 as _bz
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {k: [] for k in ("doc_id", "n_bytes", "level", "n_blocks",
-                                   "sum_bytes", "max_byte", "mean_byte")}
-            for doc_id, payload in zip(pdf["doc_id"], pdf["media"]):
-                got, level, n_blocks = _bunzip2(
-                    _bz.compress(bytes(payload), 9))
-                out["doc_id"].append(doc_id)
-                out["n_bytes"].append(len(got))
-                out["level"].append(level)
-                out["n_blocks"].append(n_blocks)
-                out["sum_bytes"].append(sum(got))
-                out["max_byte"].append(max(got) if got else 0)
-                out["mean_byte"].append(
-                    sum(got) / len(got) if got else 0.0)
-            yield pd.DataFrame(out)
+    def rows(doc_id, payload):
+        got, level, n_blocks = _bunzip2(_bz.compress(payload, 9))
+        yield (doc_id, len(got), level, n_blocks, sum(got),
+               *_px_stats(got))
 
-    return media.mapInPandas(kernel, schema=BZ2_SCHEMA)
+    return per_payload(media, BZ2_SCHEMA, rows)
 
 
 def zip_decode_features(media: DataFrame) -> DataFrame:
@@ -917,34 +890,20 @@ def zip_decode_features(media: DataFrame) -> DataFrame:
     import io
     import zipfile
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {k: [] for k in ("doc_id", "n_members", "n_bytes",
-                                   "sum_bytes", "max_byte", "mean_byte")}
-            for doc_id, payload in zip(pdf["doc_id"], pdf["media"]):
-                p = bytes(payload)
-                buf = io.BytesIO()
-                with zipfile.ZipFile(buf, "w",
-                                     zipfile.ZIP_DEFLATED) as z:
-                    for j in range(0, len(p), ZIP_PART_BYTES):
-                        z.writestr(f"part_{j // ZIP_PART_BYTES:05d}",
-                                   p[j:j + ZIP_PART_BYTES])
-                members = _unzip(buf.getvalue())
-                got = b"".join(d for _, d in members)
-                if got != p:
-                    raise ValueError(
-                        f"zip member reassembly mismatch for doc "
-                        f"{doc_id}")
-                out["doc_id"].append(doc_id)
-                out["n_members"].append(len(members))
-                out["n_bytes"].append(len(got))
-                out["sum_bytes"].append(sum(got))
-                out["max_byte"].append(max(got) if got else 0)
-                out["mean_byte"].append(
-                    sum(got) / len(got) if got else 0.0)
-            yield pd.DataFrame(out)
+    def rows(doc_id, p):
+        buf = io.BytesIO()
+        with zipfile.ZipFile(buf, "w", zipfile.ZIP_DEFLATED) as z:
+            for j in range(0, len(p), ZIP_PART_BYTES):
+                z.writestr(f"part_{j // ZIP_PART_BYTES:05d}",
+                           p[j:j + ZIP_PART_BYTES])
+        members = _unzip(buf.getvalue())
+        got = b"".join(d for _, d in members)
+        if got != p:
+            raise ValueError(
+                f"zip member reassembly mismatch for doc {doc_id}")
+        yield doc_id, len(members), len(got), sum(got), *_px_stats(got)
 
-    return media.mapInPandas(kernel, schema=ZIP_SCHEMA)
+    return per_payload(media, ZIP_SCHEMA, rows)
 
 
 def tgz_decode_features(media: DataFrame) -> DataFrame:
@@ -961,34 +920,20 @@ def tgz_decode_features(media: DataFrame) -> DataFrame:
     import io
     import tarfile
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {k: [] for k in ("doc_id", "n_members", "n_bytes",
-                                   "sum_bytes", "max_byte", "mean_byte")}
-            for doc_id, payload in zip(pdf["doc_id"], pdf["media"]):
-                p = bytes(payload)
-                buf = io.BytesIO()
-                with tarfile.open(fileobj=buf, mode="w:gz") as t:
-                    for j in range(0, len(p), ZIP_PART_BYTES):
-                        ti = tarfile.TarInfo(
-                            f"part_{j // ZIP_PART_BYTES:05d}")
-                        ti.size = len(p[j:j + ZIP_PART_BYTES])
-                        ti.mtime = 0
-                        t.addfile(ti, io.BytesIO(p[j:j + ZIP_PART_BYTES]))
-                raw, _ = _gunzip(buf.getvalue())
-                members = _untar(raw)
-                got = b"".join(d for _, d in members)
-                if got != p:
-                    raise ValueError(
-                        f"tar.gz member reassembly mismatch for doc "
-                        f"{doc_id}")
-                out["doc_id"].append(doc_id)
-                out["n_members"].append(len(members))
-                out["n_bytes"].append(len(got))
-                out["sum_bytes"].append(sum(got))
-                out["max_byte"].append(max(got) if got else 0)
-                out["mean_byte"].append(
-                    sum(got) / len(got) if got else 0.0)
-            yield pd.DataFrame(out)
+    def rows(doc_id, p):
+        buf = io.BytesIO()
+        with tarfile.open(fileobj=buf, mode="w:gz") as t:
+            for j in range(0, len(p), ZIP_PART_BYTES):
+                ti = tarfile.TarInfo(f"part_{j // ZIP_PART_BYTES:05d}")
+                ti.size = len(p[j:j + ZIP_PART_BYTES])
+                ti.mtime = 0
+                t.addfile(ti, io.BytesIO(p[j:j + ZIP_PART_BYTES]))
+        raw, _ = _gunzip(buf.getvalue())
+        members = _untar(raw)
+        got = b"".join(d for _, d in members)
+        if got != p:
+            raise ValueError(
+                f"tar.gz member reassembly mismatch for doc {doc_id}")
+        yield doc_id, len(members), len(got), sum(got), *_px_stats(got)
 
-    return media.mapInPandas(kernel, schema=TGZ_SCHEMA)
+    return per_payload(media, TGZ_SCHEMA, rows)

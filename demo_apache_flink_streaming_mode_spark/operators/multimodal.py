@@ -41,11 +41,15 @@ adaptive binary range coding), bidirectional (B-frame) motion by MCV4
 the PAC1 codec (``pac_decode_features``). What still needs codec libraries not
 present in this container is bit-exact compliance with the named
 standards' bitstream syntaxes (H.264/MP3/AAC), so the generic
-``decode_features``/``resize_media``/``sample_frames`` kernels keep
-their ``codec="fake"`` deterministic byte-math path and raise
-NotImplementedError for ``codec="real"``. Everything around the
-kernels — binary ingest, chunk manifest, Arrow batching, output
-schemas — is real.
+``decode_features``/``resize_media``/``sample_frames`` kernels are
+deterministic byte math standing in for such a codec: features from
+byte statistics, a byte-stride resize and fixed-size frame slices.
+Everything around the kernels — binary ingest, chunk manifest, Arrow
+batching, output schemas — is real.
+
+Every per-payload codec kernel runs through ``per_payload``: the kernel
+is a function from one ``(doc_id, payload)`` to its output row tuples,
+and the helper owns the Arrow batch loop and the ``mapInPandas`` call.
 """
 
 from __future__ import annotations
@@ -53,8 +57,7 @@ from __future__ import annotations
 import io
 import struct
 import wave
-from collections.abc import Iterator
-from typing import Literal
+from collections.abc import Callable, Iterable, Iterator
 
 import pandas as pd
 
@@ -100,22 +103,16 @@ def media_manifest(media: DataFrame) -> DataFrame:
     )
 
 
-def decode_features(media: DataFrame, codec: Literal["fake", "real"] = "fake",
-                    dim: int = 8) -> DataFrame:
+def decode_features(media: DataFrame, dim: int = 8) -> DataFrame:
     """Feature extraction over binary media via Arrow-batched mapInPandas.
 
     The per-batch kernel sees a pandas DataFrame with raw ``bytes`` —
-    exactly the shape a real decoder (PIL/libsndfile/ffmpeg) needs. The
-    "fake" codec derives a deterministic feature vector from byte
-    statistics so tests can assert the full pipeline shape end-to-end.
+    exactly the shape a real decoder (PIL/libsndfile/ffmpeg) needs. It
+    derives a deterministic feature vector from byte statistics so
+    tests can assert the full pipeline shape end-to-end.
     """
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            if codec == "real":
-                raise NotImplementedError(
-                    "real media decode requires image/audio libraries not "
-                    "bundled in this environment; use codec='fake' for the "
-                    "pipeline-shape path")
             feats = [
                 [float(len(b)), float(b[0] if b else 0), float(b[-1] if b else 0),
                  float(sum(b[:64]) % 997)] + [float((len(b) >> s) & 0xFF)
@@ -132,6 +129,41 @@ def decode_features(media: DataFrame, codec: Literal["fake", "real"] = "fake",
     return media.mapInPandas(kernel, schema=FEATURE_SCHEMA)
 
 
+def per_payload(media: DataFrame, schema: str,
+                fn: Callable[[int, bytes], Iterable[tuple]]) -> DataFrame:
+    """Run ``fn(doc_id, payload)`` over every row of ``media`` as one
+    Arrow-batched ``mapInPandas`` kernel.
+
+    ``fn`` yields one tuple per output row, fields in ``schema``'s
+    column order; a row that emits nothing (an empty payload in a frame
+    fan-out) yields no tuple. Each batch is built with unlabeled
+    columns, which mapInPandas assigns to ``schema`` by position, so a
+    kernel names its columns once, in ``schema``; a batch with no rows
+    becomes an empty frame with no columns, which mapInPandas accepts.
+    """
+    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            yield pd.DataFrame.from_records(
+                [row for doc_id, payload in zip(pdf["doc_id"], pdf["media"])
+                 for row in fn(doc_id, bytes(payload))])
+
+    return media.mapInPandas(kernel, schema=schema)
+
+
+def _px_stats(px: bytes) -> tuple[int, float]:
+    """(max, mean) of a pixel/sample byte string, (0, 0.0) if empty."""
+    return (max(px) if px else 0), (sum(px) / len(px) if px else 0.0)
+
+
+def _frame_rows(doc_id: int, w: int, h: int,
+                frames: list[bytes]) -> Iterator[tuple]:
+    """One ``(doc_id, frame_idx, n_frames, width, height, is_key,
+    max_px, mean_px)`` row per reconstructed frame (FLIC_SCHEMA and
+    MCV_SCHEMA); frame 0 is the key frame."""
+    for i, f in enumerate(frames):
+        yield (doc_id, i, len(frames), w, h, i == 0, *_px_stats(f))
+
+
 WAV_RATE = 8000
 WAV_SCHEMA = ("doc_id bigint, n_frames bigint, sample_rate int, "
               "n_channels int, samp_width int, max_amp int, mean_amp double")
@@ -142,42 +174,27 @@ def wav_decode_features(media: DataFrame) -> DataFrame:
 
     Each payload is containerized as an 8-bit mono WAV (RIFF header +
     the payload as PCM frames) and then decoded back through
-    ``wave.open`` — actual RIFF chunk-walking, not byte math — inside
-    the same Arrow-batched mapInPandas shape as the other kernels. This
-    is the one "real"-codec path that needs nothing beyond the stdlib;
-    image/video stay declared stubs.
+    ``wave.open`` — actual RIFF chunk-walking, not byte math.
 
     Oracle-able because the PCM frames ARE the payload bytes: frame
     count and amplitude statistics are SQL-expressible over the text's
     byte values. The mean is one exact-int sum divided once — both
     engines produce the identical double.
     """
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {k: [] for k in ("doc_id", "n_frames", "sample_rate",
-                                    "n_channels", "samp_width", "max_amp",
-                                    "mean_amp")}
-            for doc_id, payload in zip(pdf["doc_id"], pdf["media"]):
-                buf = io.BytesIO()
-                with wave.open(buf, "wb") as w:
-                    w.setnchannels(1)
-                    w.setsampwidth(1)
-                    w.setframerate(WAV_RATE)
-                    w.writeframes(bytes(payload))
-                buf.seek(0)
-                with wave.open(buf, "rb") as r:
-                    frames = r.readframes(r.getnframes())
-                    rows["doc_id"].append(doc_id)
-                    rows["n_frames"].append(r.getnframes())
-                    rows["sample_rate"].append(r.getframerate())
-                    rows["n_channels"].append(r.getnchannels())
-                    rows["samp_width"].append(r.getsampwidth())
-                    rows["max_amp"].append(max(frames) if frames else 0)
-                    rows["mean_amp"].append(
-                        sum(frames) / len(frames) if frames else 0.0)
-            yield pd.DataFrame(rows)
+    def rows(doc_id, payload):
+        buf = io.BytesIO()
+        with wave.open(buf, "wb") as w:
+            w.setnchannels(1)
+            w.setsampwidth(1)
+            w.setframerate(WAV_RATE)
+            w.writeframes(payload)
+        buf.seek(0)
+        with wave.open(buf, "rb") as r:
+            frames = r.readframes(r.getnframes())
+            yield (doc_id, r.getnframes(), r.getframerate(),
+                   r.getnchannels(), r.getsampwidth(), *_px_stats(frames))
 
-    return media.mapInPandas(kernel, schema=WAV_SCHEMA)
+    return per_payload(media, WAV_SCHEMA, rows)
 
 
 BMP_WIDTH = 64  # pixels per row; 8bpp stride 64 is already 4-byte aligned
@@ -208,43 +225,28 @@ def bmp_decode_features(media: DataFrame) -> DataFrame:
     8-bit grayscale BMP (``_encode_bmp``) then decoded back by walking
     the actual container structure — BITMAPFILEHEADER magic + pixel
     offset, BITMAPINFOHEADER dims/bpp/compression, 4-byte-aligned
-    bottom-up rows reassembled top-down — inside the same Arrow-batched
-    mapInPandas shape as the other kernels. ``codec="real"`` therefore
-    no longer raises for uncompressed images.
+    bottom-up rows reassembled top-down.
 
     Oracle-able because the pixels ARE the payload bytes plus
     deterministic zero padding to a full last row: width/height/bpp and
     the max/mean over all width*height pixels are SQL-expressible over
     the text's byte values.
     """
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {k: [] for k in ("doc_id", "width", "height", "bpp",
-                                    "n_px", "max_px", "mean_px")}
-            for doc_id, payload in zip(pdf["doc_id"], pdf["media"]):
-                blob = _encode_bmp(bytes(payload))
-                magic, _fsize, _r1, _r2, off = struct.unpack_from(
-                    "<2sIHHI", blob, 0)
-                if magic != b"BM":
-                    raise ValueError("not a BMP stream")
-                (hsz, w, h, _planes, bpp, comp, _isz, _xp, _yp, _ncol,
-                 _nimp) = struct.unpack_from("<IiiHHIIiiII", blob, 14)
-                if hsz != 40 or comp != 0 or bpp != 8:
-                    raise ValueError("unsupported DIB variant")
-                stride = (w * bpp // 8 + 3) & ~3
-                px = b"".join(
-                    blob[off + r * stride: off + r * stride + w]
-                    for r in reversed(range(h)))
-                rows["doc_id"].append(doc_id)
-                rows["width"].append(w)
-                rows["height"].append(h)
-                rows["bpp"].append(bpp)
-                rows["n_px"].append(len(px))
-                rows["max_px"].append(max(px) if px else 0)
-                rows["mean_px"].append(sum(px) / len(px) if px else 0.0)
-            yield pd.DataFrame(rows)
+    def rows(doc_id, payload):
+        blob = _encode_bmp(payload)
+        magic, _fsize, _r1, _r2, off = struct.unpack_from("<2sIHHI", blob, 0)
+        if magic != b"BM":
+            raise ValueError("not a BMP stream")
+        (hsz, w, h, _planes, bpp, comp, _isz, _xp, _yp, _ncol,
+         _nimp) = struct.unpack_from("<IiiHHIIiiII", blob, 14)
+        if hsz != 40 or comp != 0 or bpp != 8:
+            raise ValueError("unsupported DIB variant")
+        stride = (w * bpp // 8 + 3) & ~3
+        px = b"".join(blob[off + r * stride: off + r * stride + w]
+                      for r in reversed(range(h)))
+        yield doc_id, w, h, bpp, len(px), *_px_stats(px)
 
-    return media.mapInPandas(kernel, schema=BMP_SCHEMA)
+    return per_payload(media, BMP_SCHEMA, rows)
 
 
 AVI_W, AVI_H = 8, 8            # frame dims: 64 pixels = 64 payload bytes
@@ -326,9 +328,9 @@ def png_decode_features(media: DataFrame) -> DataFrame:
     validation, IDAT concatenation + ``zlib.decompress``, then full
     scanline reconstruction for all five PNG filter types (the
     encoder cycles through them, so every branch executes on every
-    blob of 5+ rows). Same Arrow-batched mapInPandas shape as the
-    other codecs. (The lossy-transform tier is ``jpeg_decode_features``;
-    motion compensation is ``mcv_decode_frames``.)
+    blob of 5+ rows). (The lossy-transform tier is
+    ``jpeg_decode_features``; motion compensation is
+    ``mcv_decode_frames``.)
 
     Oracle-able exactly like ``bmp_decode_features``: the
     reconstructed pixels are the payload bytes plus zero padding to a
@@ -336,23 +338,11 @@ def png_decode_features(media: DataFrame) -> DataFrame:
     the text's byte values — the oracle proving, end to end, that
     compress -> CRC -> decompress -> unfilter is lossless.
     """
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {k: [] for k in ("doc_id", "width", "height", "bit_depth",
-                                   "color_type", "n_px", "max_px", "mean_px")}
-            for doc_id, payload in zip(pdf["doc_id"], pdf["media"]):
-                w, h, bd, ct, px = _decode_png(_encode_png(bytes(payload)))
-                out["doc_id"].append(doc_id)
-                out["width"].append(w)
-                out["height"].append(h)
-                out["bit_depth"].append(bd)
-                out["color_type"].append(ct)
-                out["n_px"].append(len(px))
-                out["max_px"].append(max(px) if px else 0)
-                out["mean_px"].append(sum(px) / len(px) if px else 0.0)
-            yield pd.DataFrame(out)
+    def rows(doc_id, payload):
+        w, h, bd, ct, px = _decode_png(_encode_png(payload))
+        yield doc_id, w, h, bd, ct, len(px), *_px_stats(px)
 
-    return media.mapInPandas(kernel, schema=PNG_SCHEMA)
+    return per_payload(media, PNG_SCHEMA, rows)
 
 
 # --- DEFLATE: from-scratch RFC 1950/1951 inflate ---------------------------
@@ -940,43 +930,37 @@ def gif_decode_features(media: DataFrame) -> DataFrame:
     Each payload is containerized as a 256-gray GIF (``_encode_gif``)
     and decoded back the real way — signature, descriptor walk,
     sub-block reassembly, LZW decompression with width progression,
-    clear-code resets and the KwKwK case, palette mapping. Same
-    Arrow-batched mapInPandas shape as the other codecs; the
+    clear-code resets and the KwKwK case, palette mapping. The
     reconstructed pixels are the payload bytes plus zero padding, so
     the oracle over the text's byte values proves the whole
     LZW-compress -> sub-block -> decompress path is lossless.
     """
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {k: [] for k in ("doc_id", "width", "height", "n_colors",
-                                   "n_px", "max_px", "mean_px")}
-            for doc_id, payload in zip(pdf["doc_id"], pdf["media"]):
-                w, h, nc, px = _decode_gif(_encode_gif(bytes(payload)))
-                out["doc_id"].append(doc_id)
-                out["width"].append(w)
-                out["height"].append(h)
-                out["n_colors"].append(nc)
-                out["n_px"].append(len(px))
-                out["max_px"].append(max(px) if px else 0)
-                out["mean_px"].append(sum(px) / len(px) if px else 0.0)
-            yield pd.DataFrame(out)
+    def rows(doc_id, payload):
+        w, h, nc, px = _decode_gif(_encode_gif(payload))
+        yield doc_id, w, h, nc, len(px), *_px_stats(px)
 
-    return media.mapInPandas(kernel, schema=GIF_SCHEMA)
+    return per_payload(media, GIF_SCHEMA, rows)
 
 
 AVI_SCHEMA = ("doc_id bigint, frame_idx int, n_frames int, width int, "
               "height int, us_per_frame int, max_px int, mean_px double")
 
 
-def _encode_avi(payload: bytes) -> bytes:
-    """Containerize payload bytes as a minimal uncompressed 8-bit AVI:
-    RIFF('AVI ') > LIST(hdrl){avih, LIST(strl){strh, strf}} >
-    LIST(movi){'00db' frame chunks}. Each frame is AVI_W*AVI_H raw
-    pixels (one payload byte per pixel, last frame zero-padded)."""
-    fs = AVI_W * AVI_H
-    n_frames = max(1, (len(payload) + fs - 1) // fs) if payload else 0
-    frames = [payload[i * fs:(i + 1) * fs].ljust(fs, b"\x00")
-              for i in range(n_frames)]
+def _frame_slices(payload: bytes, fs: int) -> list[bytes]:
+    """The payload cut into fs-byte frames, last frame zero-padded; no
+    frames for an empty payload."""
+    return [payload[i * fs:(i + 1) * fs].ljust(fs, b"\x00")
+            for i in range((len(payload) + fs - 1) // fs)]
+
+
+def _write_avi(frames: list[bytes], w: int, h: int, handler: bytes,
+               compression: int, chunk_id: bytes) -> bytes:
+    """Write a minimal 8-bit AVI: RIFF('AVI ') > LIST(hdrl){avih,
+    LIST(strl){strh, strf}} > LIST(movi){chunk_id frame chunks}, each
+    chunk padded to an even length. ``handler`` is the strh stream
+    handler fourcc and ``compression`` the strf biCompression field."""
+    fs = w * h
+    n_frames = len(frames)
 
     def chunk(fourcc: bytes, body: bytes) -> bytes:
         pad = b"\x00" if len(body) % 2 else b""
@@ -986,17 +970,57 @@ def _encode_avi(payload: bytes) -> bytes:
         return chunk(b"LIST", fourcc + body)
 
     avih = struct.pack("<14I", AVI_FPS_US, fs * 25, 0, 0, n_frames, 0, 1,
-                       fs, AVI_W, AVI_H, 0, 0, 0, 0)
-    strh = (b"vids" + b"DIB " + struct.pack("<I", 0)
+                       fs, w, h, 0, 0, 0, 0)
+    strh = (b"vids" + handler + struct.pack("<I", 0)
             + struct.pack("<2H10I", 0, 0, 0, 1, 25, 0, n_frames, fs, 0, 0,
                           fs, 0))
-    strf = struct.pack("<IiiHHIIiiII", 40, AVI_W, AVI_H, 1, 8, 0, fs,
+    strf = struct.pack("<IiiHHIIiiII", 40, w, h, 1, 8, compression, fs,
                        0, 0, 256, 0)
     hdrl = lst(b"hdrl", chunk(b"avih", avih)
                + lst(b"strl", chunk(b"strh", strh) + chunk(b"strf", strf)))
-    movi = lst(b"movi", b"".join(chunk(b"00db", f) for f in frames))
+    movi = lst(b"movi", b"".join(chunk(chunk_id, f) for f in frames))
     body = b"AVI " + hdrl + movi
     return b"RIFF" + struct.pack("<I", len(body)) + body
+
+
+def _avi_frames(blob: bytes,
+                chunk_id: bytes) -> tuple[tuple[int, ...], list[bytes]]:
+    """Walk a RIFF/AVI chunk tree: descend into LIST(hdrl) and
+    LIST(movi), skip other lists (e.g. strl), honor even-byte padding.
+    Returns the 14 avih fields and the bodies of the ``chunk_id`` frame
+    chunks; their count must equal the header's frame count."""
+    if blob[:4] != b"RIFF" or blob[8:12] != b"AVI ":
+        raise ValueError("not a RIFF/AVI stream")
+    pos, end = 12, 8 + struct.unpack_from("<I", blob, 4)[0]
+    avih = None
+    frames = []
+    while pos + 8 <= end:
+        fourcc = blob[pos:pos + 4]
+        size = struct.unpack_from("<I", blob, pos + 4)[0]
+        body_at = pos + 8
+        if fourcc == b"LIST":
+            kind = blob[body_at:body_at + 4]
+            if kind in (b"hdrl", b"movi"):
+                pos = body_at + 4  # descend into this list
+                continue
+            pos = body_at + size + (size % 2)  # skip (e.g. strl)
+            continue
+        if fourcc == b"avih":
+            avih = struct.unpack_from("<14I", blob, body_at)
+        elif fourcc == chunk_id:
+            frames.append(blob[body_at:body_at + size])
+        pos = body_at + size + (size % 2)
+    if avih is None or len(frames) != avih[4]:
+        raise ValueError("AVI header/frame-count mismatch")
+    return avih, frames
+
+
+def _encode_avi(payload: bytes) -> bytes:
+    """Containerize payload bytes as a minimal uncompressed 8-bit AVI
+    ('DIB ' stream, '00db' frame chunks). Each frame is AVI_W*AVI_H raw
+    pixels (one payload byte per pixel, last frame zero-padded)."""
+    return _write_avi(_frame_slices(payload, AVI_W * AVI_H), AVI_W, AVI_H,
+                      b"DIB ", 0, b"00db")
 
 
 def avi_decode_frames(media: DataFrame,
@@ -1008,78 +1032,34 @@ def avi_decode_frames(media: DataFrame,
     (``_encode_avi``) and decoded back by walking the actual RIFF
     chunk tree — RIFF magic + 'AVI ' form type, LIST(hdrl) > avih for
     frame count/dims/rate, LIST(movi) > '00db' chunks (even-byte
-    padding honored) for the frames — inside the same Arrow-batched
-    mapInPandas shape as the other kernels, emitting one row per
-    every_n-th frame (1 row in -> N rows out).
+    padding honored) for the frames — emitting one row per every_n-th
+    frame (1 row in -> N rows out).
 
     Oracle-able because each frame's pixels are a fixed 64-byte slice
     of the payload (last frame zero-padded): per-frame max/mean are
     exact byte math over that slice.
     """
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {k: [] for k in ("doc_id", "frame_idx", "n_frames",
-                                    "width", "height", "us_per_frame",
-                                    "max_px", "mean_px")}
-            for doc_id, payload in zip(pdf["doc_id"], pdf["media"]):
-                blob = _encode_avi(bytes(payload))
-                if blob[:4] != b"RIFF" or blob[8:12] != b"AVI ":
-                    raise ValueError("not a RIFF/AVI stream")
-                pos, end = 12, 8 + struct.unpack_from("<I", blob, 4)[0]
-                n_frames = w = h = uspf = None
-                frames = []
-                while pos + 8 <= end:
-                    fourcc = blob[pos:pos + 4]
-                    size = struct.unpack_from("<I", blob, pos + 4)[0]
-                    body_at = pos + 8
-                    if fourcc == b"LIST":
-                        kind = blob[body_at:body_at + 4]
-                        if kind in (b"hdrl", b"movi"):
-                            pos = body_at + 4  # descend into this list
-                            continue
-                        pos = body_at + size + (size % 2)  # skip (e.g. strl)
-                        continue
-                    if fourcc == b"avih":
-                        fields = struct.unpack_from("<14I", blob, body_at)
-                        uspf, n_frames = fields[0], fields[4]
-                        w, h = fields[8], fields[9]
-                    elif fourcc == b"00db":
-                        frames.append(blob[body_at:body_at + size])
-                    pos = body_at + size + (size % 2)
-                if n_frames is None or len(frames) != n_frames:
-                    raise ValueError("AVI header/frame-count mismatch")
-                for i in range(0, n_frames, every_n):
-                    px = frames[i]
-                    rows["doc_id"].append(doc_id)
-                    rows["frame_idx"].append(i)
-                    rows["n_frames"].append(n_frames)
-                    rows["width"].append(w)
-                    rows["height"].append(h)
-                    rows["us_per_frame"].append(uspf)
-                    rows["max_px"].append(max(px) if px else 0)
-                    rows["mean_px"].append(sum(px) / len(px) if px else 0.0)
-            yield pd.DataFrame(rows)
+    def rows(doc_id, payload):
+        avih, frames = _avi_frames(_encode_avi(payload), b"00db")
+        uspf, n_frames, w, h = avih[0], avih[4], avih[8], avih[9]
+        for i in range(0, n_frames, every_n):
+            yield (doc_id, i, n_frames, w, h, uspf, *_px_stats(frames[i]))
 
-    return media.mapInPandas(kernel, schema=AVI_SCHEMA)
+    return per_payload(media, AVI_SCHEMA, rows)
 
 
 RESIZED_SCHEMA = "doc_id bigint, media_type string, media binary, n_bytes bigint"
 
 
-def resize_media(media: DataFrame, target_bytes: int = 256,
-                 codec: Literal["fake", "real"] = "fake") -> DataFrame:
+def resize_media(media: DataFrame, target_bytes: int = 256) -> DataFrame:
     """Resize/transcode kernel over mapInPandas (1 row in -> 1 row out).
 
-    With a real codec this is image resize / audio downsample; the fake
-    codec takes a deterministic byte stride so output size and schema
-    behave like a real resizer (bounded by target_bytes).
+    With a real codec this is image resize / audio downsample; here a
+    deterministic byte stride makes output size and schema behave like
+    a real resizer (bounded by target_bytes).
     """
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            if codec == "real":
-                raise NotImplementedError(
-                    "real resize requires media libraries not bundled here; "
-                    "use codec='fake' for the pipeline-shape path")
             out = []
             for b in pdf["media"]:
                 stride = max(1, len(b) // target_bytes)
@@ -1099,33 +1079,20 @@ FRAME_SCHEMA = ("doc_id bigint, frame_idx int, frame binary, "
 
 
 def sample_frames(media: DataFrame, frame_bytes: int = 1024,
-                  every_n: int = 4,
-                  codec: Literal["fake", "real"] = "fake") -> DataFrame:
-    """Frame sampling kernel (1 row in -> N rows out) over mapInPandas.
+                  every_n: int = 4) -> DataFrame:
+    """Frame sampling kernel (1 row in -> N rows out).
 
     Models video frame extraction: the payload is treated as a sequence
     of fixed-size frames and every `every_n`-th frame is emitted as its
     own row — the fan-out shape (and the reason this is mapInPandas, not
     a scalar UDF). A real codec would seek keyframes instead.
     """
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if codec == "real":
-                raise NotImplementedError(
-                    "real frame extraction requires a video codec; "
-                    "use codec='fake' for the pipeline-shape path")
-            ids, idxs, frames, totals = [], [], [], []
-            for doc_id, b in zip(pdf["doc_id"], pdf["media"]):
-                n = max(1, (len(b) + frame_bytes - 1) // frame_bytes)
-                for i in range(0, n, every_n):
-                    ids.append(doc_id)
-                    idxs.append(i)
-                    frames.append(bytes(b[i * frame_bytes:(i + 1) * frame_bytes]))
-                    totals.append(n)
-            yield pd.DataFrame({"doc_id": ids, "frame_idx": idxs,
-                                "frame": frames, "n_frames": totals})
+    def rows(doc_id, b):
+        n = max(1, (len(b) + frame_bytes - 1) // frame_bytes)
+        for i in range(0, n, every_n):
+            yield doc_id, i, b[i * frame_bytes:(i + 1) * frame_bytes], n
 
-    return media.mapInPandas(kernel, schema=FRAME_SCHEMA)
+    return per_payload(media, FRAME_SCHEMA, rows)
 
 
 # --- JPEG: real lossy transform codec, pure stdlib + numpy ----------------
@@ -1489,8 +1456,7 @@ def jpeg_decode_features(media: DataFrame) -> DataFrame:
     RLE, Annex-K standard-table Huffman coding, 0xFF stuffing) and
     decoded back the real way (``_decode_jpeg``: marker walk, Huffman
     tables rebuilt from the stream's own DHT segments, entropy decode,
-    dequantize, de-zigzag, inverse DCT).  Same Arrow-batched
-    mapInPandas shape as the other codecs.  (Motion compensation,
+    dequantize, de-zigzag, inverse DCT).  (Motion compensation,
     sub-pixel search, RD mode decisions, arithmetic coding and
     psychoacoustic allocation are covered by the MCV1/2/3 and PAC1
     codecs; the named standards' bit-exact bitstream syntaxes remain
@@ -1510,28 +1476,19 @@ def jpeg_decode_features(media: DataFrame) -> DataFrame:
     pin the empirical error far below the bound and the exact
     roundtrip of constant blocks.
     """
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-        for pdf in batches:
-            out = {k: [] for k in ("doc_id", "width", "height", "n_px",
-                                   "n_blocks", "err_le_16")}
-            for doc_id, payload in zip(pdf["doc_id"], pdf["media"]):
-                payload = bytes(payload)
-                w, h, px = _decode_jpeg(_encode_jpeg(payload))
-                orig = np.frombuffer(payload.ljust(h * w, b"\x00"),
-                                     dtype=np.uint8).reshape(h, w) \
-                    if h else np.zeros((0, w), dtype=np.uint8)
-                err = int(np.max(np.abs(px.astype(np.int32)
-                                        - orig.astype(np.int32)))) if h else 0
-                out["doc_id"].append(doc_id)
-                out["width"].append(w)
-                out["height"].append(h)
-                out["n_px"].append(w * h)
-                out["n_blocks"].append((w // 8) * (h // 8))
-                out["err_le_16"].append(err <= JPEG_ERR_BOUND)
-            yield pd.DataFrame(out)
+    import numpy as np
 
-    return media.mapInPandas(kernel, schema=JPEG_SCHEMA)
+    def rows(doc_id, payload):
+        w, h, px = _decode_jpeg(_encode_jpeg(payload))
+        orig = np.frombuffer(payload.ljust(h * w, b"\x00"),
+                             dtype=np.uint8).reshape(h, w) \
+            if h else np.zeros((0, w), dtype=np.uint8)
+        err = int(np.max(np.abs(px.astype(np.int32)
+                                - orig.astype(np.int32)))) if h else 0
+        yield (doc_id, w, h, w * h, (w // 8) * (h // 8),
+               err <= JPEG_ERR_BOUND)
+
+    return per_payload(media, JPEG_SCHEMA, rows)
 
 
 # --- MJPEG/AVI: compressed video = JPEG frames in the RIFF container ------
@@ -1549,31 +1506,11 @@ def _encode_mjpeg_avi(payload: bytes) -> bytes:
     chunk is '00dc' (compressed) holding a full ``_encode_jpeg``
     bitstream — so frame chunks have *varying* sizes, like any real
     compressed container."""
-    fs = MJPEG_W * MJPEG_H
-    n_frames = max(1, (len(payload) + fs - 1) // fs) if payload else 0
-    jpegs = [_encode_jpeg(payload[i * fs:(i + 1) * fs].ljust(fs, b"\x00"))
-             for i in range(n_frames)]
-
-    def chunk(fourcc: bytes, body: bytes) -> bytes:
-        pad = b"\x00" if len(body) % 2 else b""
-        return fourcc + struct.pack("<I", len(body)) + body + pad
-
-    def lst(fourcc: bytes, body: bytes) -> bytes:
-        return chunk(b"LIST", fourcc + body)
-
-    avih = struct.pack("<14I", AVI_FPS_US, fs * 25, 0, 0, n_frames, 0, 1,
-                       fs, MJPEG_W, MJPEG_H, 0, 0, 0, 0)
-    strh = (b"vids" + b"MJPG" + struct.pack("<I", 0)
-            + struct.pack("<2H10I", 0, 0, 0, 1, 25, 0, n_frames, fs, 0, 0,
-                          fs, 0))
-    strf = struct.pack("<IiiHHIIiiII", 40, MJPEG_W, MJPEG_H, 1, 8,
-                       0x47504A4D,  # biCompression = 'MJPG' (LE fourcc)
-                       fs, 0, 0, 256, 0)
-    hdrl = lst(b"hdrl", chunk(b"avih", avih)
-               + lst(b"strl", chunk(b"strh", strh) + chunk(b"strf", strf)))
-    movi = lst(b"movi", b"".join(chunk(b"00dc", j) for j in jpegs))
-    body = b"AVI " + hdrl + movi
-    return b"RIFF" + struct.pack("<I", len(body)) + body
+    jpegs = [_encode_jpeg(f)
+             for f in _frame_slices(payload, MJPEG_W * MJPEG_H)]
+    return _write_avi(jpegs, MJPEG_W, MJPEG_H, b"MJPG",
+                      0x47504A4D,  # biCompression = 'MJPG' (LE fourcc)
+                      b"00dc")
 
 
 def mjpeg_decode_frames(media: DataFrame,
@@ -1594,54 +1531,22 @@ def mjpeg_decode_frames(media: DataFrame,
     the same provable <=16 reconstruction-error flag as
     ``jpeg_decode_features``, checked against the original payload
     slice."""
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-        for pdf in batches:
-            rows = {k: [] for k in ("doc_id", "frame_idx", "n_frames",
-                                    "width", "height", "err_le_16")}
-            fs = MJPEG_W * MJPEG_H
-            for doc_id, payload in zip(pdf["doc_id"], pdf["media"]):
-                payload = bytes(payload)
-                blob = _encode_mjpeg_avi(payload)
-                if blob[:4] != b"RIFF" or blob[8:12] != b"AVI ":
-                    raise ValueError("not a RIFF/AVI stream")
-                pos, end = 12, 8 + struct.unpack_from("<I", blob, 4)[0]
-                n_frames = None
-                frames = []
-                while pos + 8 <= end:
-                    fourcc = blob[pos:pos + 4]
-                    size = struct.unpack_from("<I", blob, pos + 4)[0]
-                    body_at = pos + 8
-                    if fourcc == b"LIST":
-                        kind = blob[body_at:body_at + 4]
-                        if kind in (b"hdrl", b"movi"):
-                            pos = body_at + 4
-                            continue
-                        pos = body_at + size + (size % 2)
-                        continue
-                    if fourcc == b"avih":
-                        n_frames = struct.unpack_from("<14I", blob, body_at)[4]
-                    elif fourcc == b"00dc":
-                        frames.append(blob[body_at:body_at + size])
-                    pos = body_at + size + (size % 2)
-                if n_frames is None or len(frames) != n_frames:
-                    raise ValueError("AVI header/frame-count mismatch")
-                for i in range(0, n_frames, every_n):
-                    w, h, px = _decode_jpeg(frames[i])
-                    orig = np.frombuffer(
-                        payload[i * fs:(i + 1) * fs].ljust(fs, b"\x00"),
-                        dtype=np.uint8).reshape(h, w)
-                    err = int(np.max(np.abs(px.astype(np.int32)
-                                            - orig.astype(np.int32))))
-                    rows["doc_id"].append(doc_id)
-                    rows["frame_idx"].append(i)
-                    rows["n_frames"].append(n_frames)
-                    rows["width"].append(w)
-                    rows["height"].append(h)
-                    rows["err_le_16"].append(err <= JPEG_ERR_BOUND)
-            yield pd.DataFrame(rows)
+    import numpy as np
+    fs = MJPEG_W * MJPEG_H
 
-    return media.mapInPandas(kernel, schema=MJPEG_SCHEMA)
+    def rows(doc_id, payload):
+        avih, frames = _avi_frames(_encode_mjpeg_avi(payload), b"00dc")
+        n_frames = avih[4]
+        for i in range(0, n_frames, every_n):
+            w, h, px = _decode_jpeg(frames[i])
+            orig = np.frombuffer(
+                payload[i * fs:(i + 1) * fs].ljust(fs, b"\x00"),
+                dtype=np.uint8).reshape(h, w)
+            err = int(np.max(np.abs(px.astype(np.int32)
+                                    - orig.astype(np.int32))))
+            yield doc_id, i, n_frames, w, h, err <= JPEG_ERR_BOUND
+
+    return per_payload(media, MJPEG_SCHEMA, rows)
 
 
 # --- FLAC subset: real compressed LOSSLESS audio, pure stdlib -------------
@@ -1978,25 +1883,13 @@ def flac_decode_features(media: DataFrame) -> DataFrame:
     path bit-exact over the text's byte values, exactly like
     ``mm_decode_wav``/``mm_decode_png``.
     """
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {k: [] for k in ("doc_id", "n_samples", "sample_rate",
-                                    "n_frames", "max_amp", "mean_amp")}
-            for doc_id, payload in zip(pdf["doc_id"], pdf["media"]):
-                payload = bytes(payload)
-                rate, n_frames, back = _decode_flac(_encode_flac(payload))
-                if back != payload:
-                    raise ValueError("FLAC roundtrip not lossless")
-                rows["doc_id"].append(doc_id)
-                rows["n_samples"].append(len(back))
-                rows["sample_rate"].append(rate)
-                rows["n_frames"].append(n_frames)
-                rows["max_amp"].append(max(back) if back else 0)
-                rows["mean_amp"].append(
-                    sum(back) / len(back) if back else 0.0)
-            yield pd.DataFrame(rows)
+    def rows(doc_id, payload):
+        rate, n_frames, back = _decode_flac(_encode_flac(payload))
+        if back != payload:
+            raise ValueError("FLAC roundtrip not lossless")
+        yield doc_id, len(back), rate, n_frames, *_px_stats(back)
 
-    return media.mapInPandas(kernel, schema=FLAC_SCHEMA)
+    return per_payload(media, FLAC_SCHEMA, rows)
 
 
 # --- FLIC (Autodesk FLC) subset: real INTER-FRAME compressed video --------
@@ -2250,29 +2143,13 @@ def flic_decode_frames(media: DataFrame) -> DataFrame:
     math over the payload slice (zero-padded last frame), exactly like
     ``mm_decode_video``'s stats but through a genuinely predictive
     decode. Empty payloads are zero-frame files -> zero rows."""
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {k: [] for k in ("doc_id", "frame_idx", "n_frames",
-                                    "width", "height", "is_key", "max_px",
-                                    "mean_px")}
-            fs = FLIC_W * FLIC_H
-            for doc_id, payload in zip(pdf["doc_id"], pdf["media"]):
-                payload = bytes(payload)
-                w, h, frames = _decode_flic(_encode_flic(payload))
-                for i, f in enumerate(frames):
-                    if f != payload[i * fs:(i + 1) * fs].ljust(fs, b"\x00"):
-                        raise ValueError("FLIC roundtrip not lossless")
-                    rows["doc_id"].append(doc_id)
-                    rows["frame_idx"].append(i)
-                    rows["n_frames"].append(len(frames))
-                    rows["width"].append(w)
-                    rows["height"].append(h)
-                    rows["is_key"].append(i == 0)
-                    rows["max_px"].append(max(f))
-                    rows["mean_px"].append(sum(f) / fs)
-            yield pd.DataFrame(rows)
+    def rows(doc_id, payload):
+        w, h, frames = _decode_flic(_encode_flic(payload))
+        if frames != _frame_slices(payload, FLIC_W * FLIC_H):
+            raise ValueError("FLIC roundtrip not lossless")
+        return _frame_rows(doc_id, w, h, frames)
 
-    return media.mapInPandas(kernel, schema=FLIC_SCHEMA)
+    return per_payload(media, FLIC_SCHEMA, rows)
 
 
 # --- MDCT transform audio: real LOSSY audio coding, numpy + stdlib --------
@@ -2382,28 +2259,18 @@ def mdct_decode_features(media: DataFrame) -> DataFrame:
     count) plus the bound flag — the same oracle contract as
     ``mm_decode_jpeg``; the exact-valued proof lives in the hypothesis
     property tests, which hunt the whole byte-payload space."""
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-        for pdf in batches:
-            rows = {k: [] for k in ("doc_id", "n_samples", "n_frames",
-                                    "block_n", "q", "err_le_16")}
-            for doc_id, payload in zip(pdf["doc_id"], pdf["media"]):
-                payload = bytes(payload)
-                n, n_blocks, rec = _decode_mdct(_encode_mdct(payload))
-                if n != len(payload):
-                    raise ValueError("MDC1 length mismatch")
-                orig = (np.frombuffer(payload, dtype=np.uint8)
-                        .astype(np.float64) - 128.0)
-                err = float(np.max(np.abs(rec - orig))) if n else 0.0
-                rows["doc_id"].append(doc_id)
-                rows["n_samples"].append(n)
-                rows["n_frames"].append(n_blocks)
-                rows["block_n"].append(MDCT_N)
-                rows["q"].append(MDCT_Q)
-                rows["err_le_16"].append(err <= MDCT_ERR_BOUND)
-            yield pd.DataFrame(rows)
+    import numpy as np
 
-    return media.mapInPandas(kernel, schema=MDCT_SCHEMA)
+    def rows(doc_id, payload):
+        n, n_blocks, rec = _decode_mdct(_encode_mdct(payload))
+        if n != len(payload):
+            raise ValueError("MDC1 length mismatch")
+        orig = (np.frombuffer(payload, dtype=np.uint8)
+                .astype(np.float64) - 128.0)
+        err = float(np.max(np.abs(rec - orig))) if n else 0.0
+        yield doc_id, n, n_blocks, MDCT_N, MDCT_Q, err <= MDCT_ERR_BOUND
+
+    return per_payload(media, MDCT_SCHEMA, rows)
 
 
 # --- Motion-compensated video: real MOTION ESTIMATION, numpy + stdlib -----
@@ -2569,26 +2436,11 @@ def mcv_decode_frames(media: DataFrame) -> DataFrame:
     the same contract as ``flic_decode_frames`` but through genuine
     motion search rather than line deltas. Empty payloads are
     zero-frame streams -> zero rows."""
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {k: [] for k in ("doc_id", "frame_idx", "n_frames",
-                                    "width", "height", "is_key", "max_px",
-                                    "mean_px")}
-            for doc_id, payload in zip(pdf["doc_id"], pdf["media"]):
-                payload = bytes(payload)
-                w, h, frames, _mvs = _decode_mcv(_encode_mcv(payload))
-                for i, f in enumerate(frames):
-                    rows["doc_id"].append(doc_id)
-                    rows["frame_idx"].append(i)
-                    rows["n_frames"].append(len(frames))
-                    rows["width"].append(w)
-                    rows["height"].append(h)
-                    rows["is_key"].append(i == 0)
-                    rows["max_px"].append(max(f) if f else 0)
-                    rows["mean_px"].append(sum(f) / len(f) if f else 0.0)
-            yield pd.DataFrame(rows)
+    def rows(doc_id, payload):
+        w, h, frames, _mvs = _decode_mcv(_encode_mcv(payload))
+        return _frame_rows(doc_id, w, h, frames)
 
-    return media.mapInPandas(kernel, schema=MCV_SCHEMA)
+    return per_payload(media, MCV_SCHEMA, rows)
 
 
 # --- MCV2: HALF-PEL motion (sub-pixel estimation + compensation) ----------
@@ -2737,26 +2589,11 @@ def mcv2_decode_frames(media: DataFrame) -> DataFrame:
     byte math over the payload slice (zero-padded last frame) — the
     same contract as ``mcv_decode_frames``, one motion rung up. Empty
     payloads are zero-frame streams -> zero rows."""
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {k: [] for k in ("doc_id", "frame_idx", "n_frames",
-                                    "width", "height", "is_key", "max_px",
-                                    "mean_px")}
-            for doc_id, payload in zip(pdf["doc_id"], pdf["media"]):
-                payload = bytes(payload)
-                w, h, frames, _mvs = _decode_mcv2(_encode_mcv2(payload))
-                for i, f in enumerate(frames):
-                    rows["doc_id"].append(doc_id)
-                    rows["frame_idx"].append(i)
-                    rows["n_frames"].append(len(frames))
-                    rows["width"].append(w)
-                    rows["height"].append(h)
-                    rows["is_key"].append(i == 0)
-                    rows["max_px"].append(max(f) if f else 0)
-                    rows["mean_px"].append(sum(f) / len(f) if f else 0.0)
-            yield pd.DataFrame(rows)
+    def rows(doc_id, payload):
+        w, h, frames, _mvs = _decode_mcv2(_encode_mcv2(payload))
+        return _frame_rows(doc_id, w, h, frames)
 
-    return media.mapInPandas(kernel, schema=MCV_SCHEMA)
+    return per_payload(media, MCV_SCHEMA, rows)
 
 
 # --- MCV3: RATE-BASED MODE DECISION + ADAPTIVE BINARY RANGE CODING --------
@@ -3181,26 +3018,11 @@ def mcv3_decode_frames(media: DataFrame) -> DataFrame:
     byte math over the payload slice (zero-padded last frame) — the
     same contract as ``mcv_decode_frames``/``mcv2_decode_frames``.
     Empty payloads are zero-frame streams -> zero rows."""
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {k: [] for k in ("doc_id", "frame_idx", "n_frames",
-                                    "width", "height", "is_key", "max_px",
-                                    "mean_px")}
-            for doc_id, payload in zip(pdf["doc_id"], pdf["media"]):
-                payload = bytes(payload)
-                w, h, frames, _modes = _decode_mcv3(_encode_mcv3(payload))
-                for i, f in enumerate(frames):
-                    rows["doc_id"].append(doc_id)
-                    rows["frame_idx"].append(i)
-                    rows["n_frames"].append(len(frames))
-                    rows["width"].append(w)
-                    rows["height"].append(h)
-                    rows["is_key"].append(i == 0)
-                    rows["max_px"].append(max(f) if f else 0)
-                    rows["mean_px"].append(sum(f) / len(f) if f else 0.0)
-            yield pd.DataFrame(rows)
+    def rows(doc_id, payload):
+        w, h, frames, _modes = _decode_mcv3(_encode_mcv3(payload))
+        return _frame_rows(doc_id, w, h, frames)
 
-    return media.mapInPandas(kernel, schema=MCV_SCHEMA)
+    return per_payload(media, MCV_SCHEMA, rows)
 
 
 # --- PAC1: PSYCHOACOUSTIC bit allocation over the MDCT core ---------------
@@ -3363,28 +3185,18 @@ def pac_decode_features(media: DataFrame) -> DataFrame:
     flag — the same oracle contract as ``mm_decode_mdct``; the
     exact-valued proof and the masking-behavior tests live in the
     property suite."""
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-        for pdf in batches:
-            rows = {k: [] for k in ("doc_id", "n_samples", "n_frames",
-                                    "n_bands", "err_le_bound")}
-            for doc_id, payload in zip(pdf["doc_id"], pdf["media"]):
-                payload = bytes(payload)
-                n, n_blocks, rec, _steps, bound = _decode_pac(
-                    _encode_pac(payload))
-                if n != len(payload):
-                    raise ValueError("PAC1 length mismatch")
-                orig = (np.frombuffer(payload, dtype=np.uint8)
-                        .astype(np.float64) - 128.0)
-                err = float(np.max(np.abs(rec - orig))) if n else 0.0
-                rows["doc_id"].append(doc_id)
-                rows["n_samples"].append(n)
-                rows["n_frames"].append(n_blocks)
-                rows["n_bands"].append(PAC_N_BANDS)
-                rows["err_le_bound"].append(err <= bound + 1e-9)
-            yield pd.DataFrame(rows)
+    import numpy as np
 
-    return media.mapInPandas(kernel, schema=PAC_SCHEMA)
+    def rows(doc_id, payload):
+        n, n_blocks, rec, _steps, bound = _decode_pac(_encode_pac(payload))
+        if n != len(payload):
+            raise ValueError("PAC1 length mismatch")
+        orig = (np.frombuffer(payload, dtype=np.uint8)
+                .astype(np.float64) - 128.0)
+        err = float(np.max(np.abs(rec - orig))) if n else 0.0
+        yield doc_id, n, n_blocks, PAC_N_BANDS, err <= bound + 1e-9
+
+    return per_payload(media, PAC_SCHEMA, rows)
 
 
 # --- MCV4: BIDIRECTIONAL (B-frame) motion ----------------------------------
@@ -3613,27 +3425,12 @@ def mcv4_decode_frames(media: DataFrame) -> DataFrame:
     schema = ("doc_id bigint, frame_idx int, n_frames int, width int, "
               "height int, frame_type string, max_px int, mean_px double")
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {k: [] for k in ("doc_id", "frame_idx", "n_frames",
-                                    "width", "height", "frame_type",
-                                    "max_px", "mean_px")}
-            for doc_id, payload in zip(pdf["doc_id"], pdf["media"]):
-                payload = bytes(payload)
-                w, h, frames, types, _modes = _decode_mcv4(
-                    _encode_mcv4(payload))
-                for i, f in enumerate(frames):
-                    rows["doc_id"].append(doc_id)
-                    rows["frame_idx"].append(i)
-                    rows["n_frames"].append(len(frames))
-                    rows["width"].append(w)
-                    rows["height"].append(h)
-                    rows["frame_type"].append(types[i])
-                    rows["max_px"].append(max(f) if f else 0)
-                    rows["mean_px"].append(sum(f) / len(f) if f else 0.0)
-            yield pd.DataFrame(rows)
+    def rows(doc_id, payload):
+        w, h, frames, types, _modes = _decode_mcv4(_encode_mcv4(payload))
+        for i, f in enumerate(frames):
+            yield (doc_id, i, len(frames), w, h, types[i], *_px_stats(f))
 
-    return media.mapInPandas(kernel, schema=schema)
+    return per_payload(media, schema, rows)
 
 
 # --- perceptual-hash (dHash) image fingerprinting ------------------------
@@ -3664,34 +3461,30 @@ PHASH_SCHEMA = "doc_id bigint, b0 int, b1 int, b2 int, b3 int"
 
 def media_dhash(media: DataFrame) -> DataFrame:
     """Per-doc perceptual hash of the key frame, as PHASH_BANDS 16-bit
-    band ints (Arrow-batched kernel; integer math only)."""
+    band ints (integer math only)."""
     import numpy as np
 
     fs = PHASH_W * PHASH_H
     blk = PHASH_W // PHASH_GRID
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {k: [] for k in ("doc_id", "b0", "b1", "b2", "b3")}
-            for doc_id, payload in zip(pdf["doc_id"], pdf["media"]):
-                raw = bytes(payload)[:fs]
-                px = np.zeros(fs, dtype=np.int64)
-                px[:len(raw)] = np.frombuffer(raw, dtype=np.uint8)
-                g = px.reshape(PHASH_H, PHASH_W)
-                bs = (g.reshape(PHASH_GRID, blk, PHASH_GRID, blk)
-                      .sum(axis=(1, 3)))
-                bits = bs > np.roll(bs, -1, axis=1)
-                rows["doc_id"].append(doc_id)
-                for k in range(PHASH_BANDS):
-                    v = 0
-                    for dr in range(2):
-                        for c in range(PHASH_GRID):
-                            if bits[2 * k + dr, c]:
-                                v |= 1 << (dr * PHASH_GRID + c)
-                    rows[f"b{k}"].append(v)
-            yield pd.DataFrame(rows)
+    def rows(doc_id, payload):
+        raw = payload[:fs]
+        px = np.zeros(fs, dtype=np.int64)
+        px[:len(raw)] = np.frombuffer(raw, dtype=np.uint8)
+        g = px.reshape(PHASH_H, PHASH_W)
+        bs = g.reshape(PHASH_GRID, blk, PHASH_GRID, blk).sum(axis=(1, 3))
+        bits = bs > np.roll(bs, -1, axis=1)
+        bands = []
+        for k in range(PHASH_BANDS):
+            v = 0
+            for dr in range(2):
+                for c in range(PHASH_GRID):
+                    if bits[2 * k + dr, c]:
+                        v |= 1 << (dr * PHASH_GRID + c)
+            bands.append(v)
+        yield doc_id, *bands
 
-    return media.mapInPandas(kernel, schema=PHASH_SCHEMA)
+    return per_payload(media, PHASH_SCHEMA, rows)
 
 
 def phash_near_pairs(media: DataFrame,

@@ -1293,7 +1293,7 @@ def mm_decode_features(spark, sf_dir):
     reproduced bit-for-bit by the DuckDB oracle over hex(encode(text)).
     """
     media = multimodal.to_media(_docs(spark, sf_dir))
-    feats = multimodal.decode_features(media, codec="fake", dim=MM_DIM)
+    feats = multimodal.decode_features(media, dim=MM_DIM)
     return feats.select(
         "doc_id", "media_type", "n_bytes",
         *[F.col("feature")[i].alias(f"f{i}") for i in range(MM_DIM)])
@@ -1574,7 +1574,7 @@ def mm_resize(spark, sf_dir):
     safe); the oracle recomputes the byte stride in SQL over hex pairs.
     """
     media = multimodal.to_media(_docs(spark, sf_dir))
-    r = multimodal.resize_media(media, target_bytes=MM_RESIZE_BYTES, codec="fake")
+    r = multimodal.resize_media(media, target_bytes=MM_RESIZE_BYTES)
     return r.select("doc_id", "media_type", "n_bytes",
                     F.hex("media").alias("media_hex"))
 
@@ -1583,7 +1583,7 @@ def mm_frames(spark, sf_dir):
     """Frame-sampling kernel (1 row in -> N rows out mapInPandas shape)."""
     media = multimodal.to_media(_docs(spark, sf_dir))
     fr = multimodal.sample_frames(media, frame_bytes=MM_FRAME_BYTES,
-                                  every_n=MM_EVERY_N, codec="fake")
+                                  every_n=MM_EVERY_N)
     return fr.select("doc_id", "frame_idx",
                      F.hex("frame").alias("frame_hex"), "n_frames")
 

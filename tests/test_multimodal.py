@@ -1,5 +1,5 @@
 """Multimodal kernel plumbing (SURVEY.md §2.10): schema, batch shape,
-fan-out, and stub gating for the mapInPandas media kernels."""
+fan-out, and empty-payload handling for the mapInPandas media kernels."""
 
 from __future__ import annotations
 
@@ -46,14 +46,6 @@ def test_frame_sampling_fanout(spark, media):
         n = max(1, (sizes[doc_id] + 63) // 64)
         assert all(f["n_frames"] == n for f in fr)
         assert sorted(f["frame_idx"] for f in fr) == list(range(0, n, 2))
-
-
-def test_real_codec_raises(spark, media):
-    from py4j.protocol import Py4JJavaError
-    with pytest.raises(Exception) as ei:
-        multimodal.resize_media(media, codec="real").collect()
-    assert "NotImplementedError" in str(ei.value) or isinstance(
-        ei.value, NotImplementedError)
 
 
 def test_rate_generators_shape(spark):
@@ -227,31 +219,14 @@ def test_mjpeg_frames_decode_within_bound():
     frame chunks must have VARYING sizes (real compression), every
     sampled frame must reconstruct its payload slice within the JPEG
     bound, and a corrupted frame bitstream must raise."""
-    import struct
-
     import numpy as np
     payload = bytes(range(256)) * 3 + b"tail bytes beyond a frame"
     blob = multimodal._encode_mjpeg_avi(payload)
-    sizes, frames = [], []
-    pos, end = 12, 8 + struct.unpack_from("<I", blob, 4)[0]
-    while pos + 8 <= end:
-        fourcc = blob[pos:pos + 4]
-        size = struct.unpack_from("<I", blob, pos + 4)[0]
-        body = pos + 8
-        if fourcc == b"LIST":
-            kind = blob[body:body + 4]
-            if kind in (b"hdrl", b"movi"):
-                pos = body + 4
-                continue
-            pos = body + size + (size % 2)
-            continue
-        if fourcc == b"00dc":
-            sizes.append(size)
-            frames.append(blob[body:body + size])
-        pos = body + size + (size % 2)
+    _avih, frames = multimodal._avi_frames(blob, b"00dc")
     fs = multimodal.MJPEG_W * multimodal.MJPEG_H
     assert len(frames) == (len(payload) + fs - 1) // fs
-    assert len(set(sizes)) > 1, "all frame chunks same size - not compressed?"
+    assert len({len(f) for f in frames}) > 1, \
+        "all frame chunks same size - not compressed?"
     for i, fr in enumerate(frames):
         w, h, px = multimodal._decode_jpeg(fr)
         assert (w, h) == (multimodal.MJPEG_W, multimodal.MJPEG_H)
@@ -274,26 +249,53 @@ def test_mjpeg_kernel_fanout_and_flags(spark, media):
         assert r["err_le_16"] is True
 
 
-def test_mjpeg_empty_payload_yields_zero_frames(spark):
-    """r6 ADVICE pin: an EMPTY payload encodes as a zero-frame AVI, so
-    the kernel emits ZERO rows for that doc — and the oracle's frame
-    count carries the matching CASE WHEN n = 0 THEN 0 guard (driver
-    compare would otherwise diverge by one phantom frame_idx-0 row)."""
+FANOUT_KERNELS = {
+    "mm_decode_video": multimodal.avi_decode_frames,
+    "mm_decode_mjpeg": multimodal.mjpeg_decode_frames,
+    "mm_decode_flic": multimodal.flic_decode_frames,
+    "mm_decode_mcv": multimodal.mcv_decode_frames,
+    "mm_decode_mcv2": multimodal.mcv2_decode_frames,
+    "mm_decode_mcv3": multimodal.mcv3_decode_frames,
+    "mm_decode_mcv4": multimodal.mcv4_decode_frames,
+}
+
+
+@pytest.mark.parametrize("query", sorted(FANOUT_KERNELS))
+def test_fanout_empty_payload_yields_zero_frames(spark, query):
+    """An EMPTY payload encodes as a zero-frame stream, so each frame
+    fan-out kernel emits ZERO rows for that doc — and its registry
+    oracle's frame count carries the matching CASE WHEN n = 0 THEN 0
+    guard (the oracle comparison would otherwise diverge by one phantom
+    frame_idx-0 row). Doc 3 sits alone in its own partition, so one
+    Arrow batch yields no rows at all."""
     import duckdb
 
     from demo_apache_flink_streaming_mode_spark.plans.registry import get
 
-    blob = multimodal._encode_mjpeg_avi(b"")
-    docs = spark.createDataFrame([(1, ""), (2, "x")], "doc_id long, text string")
-    rows = multimodal.mjpeg_decode_frames(multimodal.to_media(docs)).collect()
+    schema = "doc_id long, media binary, media_type string"
+    rdd = spark.sparkContext.parallelize(
+        [(3, b"", "t"), (1, b"", "t"), (2, b"x", "t")], 2)
+    media = spark.createDataFrame(rdd, schema)
+    layout = media.rdd.glom().map(
+        lambda p: sorted(r["doc_id"] for r in p)).collect()
+    assert sorted(layout) == [[1, 2], [3]]
+    rows = FANOUT_KERNELS[query](media).collect()
     assert sorted(r["doc_id"] for r in rows) == [2]
-    assert len(blob) > 0  # still a well-formed (if empty) container
 
     con = duckdb.connect()
     con.execute("CREATE VIEW documents AS SELECT * FROM (VALUES "
-                "(1, ''), (2, 'x')) AS t(doc_id, text)")
-    got = con.execute(get("mm_decode_mjpeg").oracle).fetchall()
+                "(1, ''), (2, 'x'), (3, '')) AS t(doc_id, text)")
+    got = con.execute(get(query).oracle).fetchall()
     assert sorted(r[0] for r in got) == [2]
+
+
+def test_empty_avi_is_a_well_formed_container():
+    """An empty payload still writes a parseable RIFF tree: header
+    present, zero frames on both the raw and the MJPEG writer."""
+    for blob, chunk_id in ((multimodal._encode_avi(b""), b"00db"),
+                           (multimodal._encode_mjpeg_avi(b""), b"00dc")):
+        avih, frames = multimodal._avi_frames(blob, chunk_id)
+        assert avih[4] == 0 and frames == []
 
 
 def test_flic_kernel_fanout_and_stats(spark, media):
